@@ -64,7 +64,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from etl_mssql_to_postgres_dailysync_spark.session import get_spark
+from etl_mssql_to_postgres_dailysync_spark.session import get_spark, local_cpus
 
 # Headline set: the flagship merge family + representative scan/agg/dedup/
 # similarity queries. Keep this stable round-over-round for comparability.
@@ -411,7 +411,7 @@ def main() -> None:
         # r11 additions (r10 verdict ask #2a): echo what the session actually
         # ran on so the driver's scaling heuristic stops guessing from
         # overhead-dominated per-query ratios. Additive fields only.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None,
+        "cpus": local_cpus(),
         "default_parallelism": spark.sparkContext.defaultParallelism,
         # r10 verdict ask #2b: headline-adjacent control sample (same sample
         # as control_sec — named so per-section ratios are explicit).

@@ -49,7 +49,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 # A matched-condition receives (source_col, target_col) accessors and returns
@@ -60,26 +60,34 @@ MatchedCondition = Callable[[ColAccessor, ColAccessor], Column]
 
 @dataclass
 class MergeResult:
-    """Merged DataFrame plus the branch DataFrames for metrics (A5:
-    ``cur.rowcount`` analog — dags/mssql_to_postgresql_orders_daily.py:328-335)."""
+    """Merged DataFrame plus its DML counts (A5: ``cur.rowcount`` analog —
+    dags/mssql_to_postgresql_orders_daily.py:328-335)."""
 
     df: DataFrame
+    _with_markers: DataFrame = None  # type: ignore[assignment]
+
+    @staticmethod
+    def _count_cols() -> list[Column]:
+        action = F.col("__merge_action__")
+        return [
+            F.count(F.lit(1)).alias("total"),
+            F.count_if(action == "update").alias("updated"),
+            F.count_if(action == "insert").alias("inserted"),
+            F.count_if(action == "keep").alias("kept"),
+        ]
 
     def counts_df(self) -> DataFrame:
-        """A5 metrics as a lazy 1-row DataFrame (``cur.rowcount`` analog) —
-        one aggregate pass over the marker column."""
-        return self._with_markers.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.count_if(F.col("__merge_action__") == "update").alias("updated"),
-            F.count_if(F.col("__merge_action__") == "insert").alias("inserted"),
-            F.count_if(F.col("__merge_action__") == "keep").alias("kept"),
-        )
+        """The counts as a lazy 1-row DataFrame — one aggregate pass over the
+        marker column."""
+        return self._with_markers.agg(*self._count_cols())
 
-    def counts(self) -> dict[str, int]:
-        row = self.counts_df().collect()[0]
-        return {k: row[k] for k in ("total", "updated", "inserted", "kept")}
-
-    _with_markers: DataFrame = None  # type: ignore[assignment]
+    def observed(self) -> tuple[DataFrame, Observation]:
+        """The merged DataFrame with the counts riding along as an
+        ``Observation``: the action that consumes the DataFrame (the sink
+        write) fills it, with no second pass over the merge."""
+        obs = Observation()
+        df = self._with_markers.observe(obs, *self._count_cols())
+        return df.drop("__merge_action__"), obs
 
 
 def dedupe_last_wins(
@@ -229,10 +237,3 @@ def _merge_small_source(t, s, tc, sc, keys, non_keys, updatable, guard):
     with_markers = updated.unionByName(inserts)
     return MergeResult(df=with_markers.drop("__merge_action__"), _with_markers=with_markers)
 
-
-def snapshot_replace(source: DataFrame) -> DataFrame:
-    """S9 — TRUNCATE + full reload semantics
-    (dags/mssql_to_postgresql_orders_daily.py:492-503): the post-state is
-    simply the source batch; provided for symmetry + the writer applies it as
-    ``mode("overwrite")`` (optionally ``option("truncate", True)`` on JDBC)."""
-    return source

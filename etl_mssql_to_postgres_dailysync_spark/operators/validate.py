@@ -37,20 +37,13 @@ def null_counts(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     )
 
 
-def any_null_row_count(df: DataFrame, cols: Sequence[str]) -> int:
-    """A4 — rows with a NULL in any of ``cols`` (csv_to_mssqldb.py:350-351)."""
-    pred = None
-    for c in cols:
-        p = F.col(c).isNull()
-        pred = p if pred is None else (pred | p)
-    return df.filter(pred).count()
-
-
-def observe_count(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
+def observe_count(df: DataFrame) -> tuple[DataFrame, Observation]:
     """A2 — running row count as a load-side effect: the Spark analog of the
     reference's chunk-loop counter (dags/…_orders_daily.py:204-208) without a
-    second scan. Read ``obs.get`` after an action runs."""
-    obs = Observation(name)
+    second scan. Read ``obs.get`` after an action runs. The observation is
+    unnamed (a fresh UUID): one plan may stack several, e.g. a sync over the
+    previous sync's output, and Spark rejects two with the same name."""
+    obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
@@ -60,7 +53,6 @@ class ReconciliationReport:
 
     extracted: int
     loaded: int
-    target_visible: int | None = None
     warnings: list[str] = field(default_factory=list)
 
     @property
@@ -68,17 +60,13 @@ class ReconciliationReport:
         return not self.warnings
 
 
-def reconcile(
-    extracted: int, loaded: int, target_visible: int | None = None
-) -> ReconciliationReport:
+def reconcile(extracted: int, loaded: int) -> ReconciliationReport:
     """Compare pipeline-stage counts; warn (never raise) on mismatch, matching
     the reference's log-only posture (dags/…_orders_daily.py:580-584)."""
     warnings = []
     if extracted != loaded:
         warnings.append(f"extracted={extracted} != loaded={loaded}")
-    if target_visible is not None and target_visible < loaded:
-        warnings.append(f"target_visible={target_visible} < loaded={loaded}")
-    report = ReconciliationReport(extracted, loaded, target_visible, warnings)
+    report = ReconciliationReport(extracted, loaded, warnings)
     for w in warnings:
         log.warning("reconciliation: %s", w)
     if not warnings:

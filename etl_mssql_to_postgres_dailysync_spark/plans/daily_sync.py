@@ -9,6 +9,11 @@ quarantine) branch off that scan, counts ride along as ``observe`` metrics
 (no extra scans), and the temp-CSV + XCom machinery disappears — the
 DataFrame is the exchange.
 
+``daily_sync`` itself runs no Spark job. The sink's writes of the two
+returned DataFrames fill the observations; reading ``metrics`` or ``report``
+blocks until the first action over each returned DataFrame has run, and that
+action must consume the DataFrame fully (a write or a count, not ``first``).
+
 Scale: the date predicate reaches the source scan (JDBC pushdown or parquet
 row-group pruning); the merge uses the ``small_source`` strategy because a
 daily delta is tiny relative to the accumulated target.
@@ -17,22 +22,50 @@ daily delta is tiny relative to the accumulated target.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from etl_mssql_to_postgres_dailysync_spark.operators import filters, project
 
 from etl_mssql_to_postgres_dailysync_spark.operators.merge import merge as merge_op
-from etl_mssql_to_postgres_dailysync_spark.operators.validate import reconcile, ReconciliationReport
+from etl_mssql_to_postgres_dailysync_spark.operators.validate import (
+    ReconciliationReport,
+    observe_count,
+    reconcile,
+)
 
 
 @dataclass
 class DailySyncResult:
     merged_target: DataFrame        # post-merge state of the complete-orders target
     incomplete_snapshot: DataFrame  # snapshot-replace state of the quarantine table
-    metrics: dict
-    report: ReconciliationReport
+    _extracted: Observation
+    _merged: Observation
+    _quarantined: Observation
+
+    @cached_property
+    def metrics(self) -> dict:
+        """Row counts of the run, read from the observations. Blocks until the
+        first action over each returned DataFrame has run; that action must
+        consume it fully, as the sink write does."""
+        counts = self._merged.get
+        return {
+            "extracted_row_count": self._extracted.get["rows"],
+            "loaded_row_count": counts["updated"] + counts["inserted"],
+            "null_extracted_row_count": self._quarantined.get["rows"],
+            **{f"merge_{k}": v for k, v in counts.items()},
+        }
+
+    @cached_property
+    def report(self) -> ReconciliationReport:
+        """Extracted run-date rows vs rows the merge updated or inserted: a
+        duplicate or NULL-key row in the extract makes them differ. Blocks
+        like ``metrics``, on the same fully consuming first actions."""
+        return reconcile(
+            self.metrics["extracted_row_count"], self.metrics["loaded_row_count"]
+        )
 
 
 def daily_sync(
@@ -42,39 +75,20 @@ def daily_sync(
     *,
     ts_col: str = "OrderCreatedAt",
     keys: tuple[str, ...] = ("OrderID",),
-    strategy: str = "small_source",
 ) -> DailySyncResult:
     """One logical-date run: extract the date partition, split
     complete/incomplete, upsert complete into the target, snapshot-replace
-    the quarantine, reconcile counts."""
+    the quarantine, reconcile counts. Lazy: runs no Spark job."""
     src = project.drop_surrogate(source)
 
-    complete = src.filter(filters.daily_partition(ts_col, run_date))
-    incomplete = src.filter(filters.null_partition(ts_col))
-    incomplete = project.with_audit_timestamp(incomplete)
+    complete, extracted = observe_count(src.filter(filters.daily_partition(ts_col, run_date)))
+    incomplete, quarantined = observe_count(
+        project.with_audit_timestamp(src.filter(filters.null_partition(ts_col)))
+    )
 
     complete = filters.drop_null_keys(complete, keys)
-    mr = merge_op(target, complete, keys, strategy=strategy)
-
-    extracted = complete.count()
-    counts = mr.counts()
-    loaded = counts["updated"] + counts["inserted"]
-    # The reference reports DML-affected rows; re-merged identical rows count
-    # as loaded there too, so reconcile on extracted vs (updated+inserted+kept-preexisting)
-    report = reconcile(extracted, counts["updated"] + counts["inserted"] + _rematched(counts, extracted))
-    metrics = {
-        "extracted_row_count": extracted,
-        "loaded_row_count": loaded,
-        "null_extracted_row_count": incomplete.count(),
-        **{f"merge_{k}": v for k, v in counts.items()},
-    }
-    return DailySyncResult(mr.df, incomplete, metrics, report)
-
-
-def _rematched(counts: dict, extracted: int) -> int:
-    # rows that matched but were identical/not-updated still "loaded" in the
-    # reference's ON CONFLICT accounting
-    return max(0, extracted - counts["updated"] - counts["inserted"])
+    merged, counts = merge_op(target, complete, keys, strategy="small_source").observed()
+    return DailySyncResult(merged, incomplete, extracted, counts, quarantined)
 
 
 def backfill(

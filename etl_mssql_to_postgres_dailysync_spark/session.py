@@ -18,6 +18,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Cores for ``local[n]``: ``SPARK_GRAFT_CPUS`` when set, else the CPU
+    count. Raises ``ValueError`` when the variable is not a positive integer."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 4
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cpus
+
+
 def get_spark(
     app_name: str = "etl-mssql-to-postgres-dailysync-spark",
     master: str | None = None,
@@ -35,11 +50,11 @@ def get_spark(
         (MSSQL_EXTRACT_CHUNKSIZE etc. in the reference).
       - Arrow on: any Pandas-UDF path is batch-vectorized.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -48,8 +48,12 @@ def test_plain_upsert(target, source, strategy):
         (3, "t3", dt.datetime(2025, 1, 3)),
         (4, "s4", dt.datetime(2025, 2, 4)),
     }
-    counts = out.counts()
+    counts = out.counts_df().first().asDict()
     assert counts == {"total": 4, "updated": 1, "inserted": 1, "kept": 2}
+    # the same counts ride along on the action that consumes the merge
+    observed, obs = out.observed()
+    assert _rows(observed) == _rows(out.df)
+    assert obs.get == counts
 
 
 @pytest.mark.parametrize("strategy", ["full_outer", "small_source"])

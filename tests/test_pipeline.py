@@ -1,6 +1,9 @@
 """Daily-sync pipeline invariants (FIXTURES.md §4) on the deterministic
 fake-orders generator."""
 
+import uuid
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_mssql_to_postgres_dailysync_spark.operators import filters, project
@@ -31,23 +34,98 @@ def test_split_completeness(spark):
     assert complete.count() + incomplete.count() == 500
 
 
-def test_daily_sync_run(spark):
-    src = fake_orders(spark, 1000)
-    some_date = (
+def _busiest_date(src):
+    return str(
         src.filter(F.col("OrderCreatedAt").isNotNull())
         .select(F.to_date("OrderCreatedAt").alias("d"))
-        .groupBy("d").count().orderBy(F.desc("count")).first()["d"]
+        .groupBy("d").count().orderBy(F.desc("count"), "d").first()["d"]
     )
+
+
+def _sink(res, path):
+    """Write each output of ``daily_sync`` once, as the TxnTable sink does;
+    ``metrics`` and ``report`` are read from these writes."""
+    res.merged_target.write.parquet(str(path / "target"))
+    res.incomplete_snapshot.write.parquet(str(path / "incomplete"))
+    return res.merged_target.sparkSession.read.parquet(str(path / "target"))
+
+
+def _jobs_run_by(sc, build):
+    group = f"single-pass-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_daily_sync_run(spark, tmp_path):
+    src = fake_orders(spark, 1000)
+    some_date = _busiest_date(src)
     target = src.filter(F.lit(False))  # empty target, same schema
-    res = daily_sync(src, target, str(some_date))
+    res = daily_sync(src, target, some_date)
+    first = _sink(res, tmp_path / "first")
     assert res.metrics["extracted_row_count"] > 0
     assert res.metrics["merge_inserted"] == res.metrics["extracted_row_count"]
-    assert res.report.ok
+    assert res.report.ok, res.report.warnings
     # incomplete snapshot got the audit column
     assert "loaded_at_timestamp" in res.incomplete_snapshot.columns
-    # idempotent re-run: merging same day again changes nothing
-    res2 = daily_sync(src, res.merged_target, str(some_date))
-    assert res2.merged_target.exceptAll(res.merged_target).count() == 0
+    # idempotent re-run: merging same day again changes nothing, and every
+    # extracted row reconciles as updated
+    res2 = daily_sync(src, first, some_date)
+    assert _sink(res2, tmp_path / "again").exceptAll(first).count() == 0
+    assert res2.report.ok, res2.report.warnings
+    assert res2.metrics["merge_updated"] == res2.metrics["extracted_row_count"]
+
+
+@pytest.mark.parametrize("bad_rows", ["duplicate_day", "null_key"])
+def test_reconciliation_warns_on_rows_not_loaded(spark, tmp_path, bad_rows):
+    """Every run-date row duplicated, or one run-date row with a NULL key:
+    the extract holds rows the merge cannot load, so reconciliation warns."""
+    src = fake_orders(spark, 1000)
+    run_date = _busiest_date(src)
+    day = src.filter(filters.daily_partition("OrderCreatedAt", run_date))
+    if bad_rows == "null_key":
+        day = day.limit(1).withColumn("OrderID", F.lit(None).cast("bigint"))
+    res = daily_sync(src.unionByName(day), src.filter(F.lit(False)), run_date)
+    _sink(res, tmp_path)
+    loaded = src.filter(F.to_date("OrderCreatedAt") == run_date).count()
+    extracted = loaded + day.count()
+    assert not res.report.ok
+    assert res.report.warnings == [f"extracted={extracted} != loaded={loaded}"]
+
+
+def test_daily_sync_single_pass(spark, sf_dir, tmp_path):
+    """``daily_sync`` and the registry pipeline build run no Spark job; the
+    counts come from the sink's writes and match plain filter counts."""
+    from etl_mssql_to_postgres_dailysync_spark.plans.driver_queries import QUERIES
+
+    sc = spark.sparkContext
+    src = fake_orders(spark, 1000)
+    run_date = _busiest_date(src)
+    # half the keys already synced, on every date: updates, inserts and keeps
+    target = src.filter(F.col("OrderCreatedAt").isNotNull() & (F.col("OrderID") % 2 == 0))
+    res, jobs = _jobs_run_by(sc, lambda: daily_sync(src, target, run_date))
+    assert jobs == 0
+    _, jobs = _jobs_run_by(sc, lambda: QUERIES["daily_sync_pipeline"](spark, sf_dir))
+    assert jobs == 0
+
+    _sink(res, tmp_path)
+    day = src.filter(F.to_date("OrderCreatedAt") == run_date)
+    extracted = day.count()
+    updated = day.filter(F.col("OrderID") % 2 == 0).count()
+    kept = target.count() - updated
+    assert res.metrics == {
+        "extracted_row_count": extracted,
+        "loaded_row_count": extracted,
+        "null_extracted_row_count": src.filter(F.col("OrderCreatedAt").isNull()).count(),
+        "merge_total": kept + extracted,
+        "merge_updated": updated,
+        "merge_inserted": extracted - updated,
+        "merge_kept": kept,
+    }
+    assert res.report.ok
 
 
 def test_backfill_equals_union_of_days(spark):
@@ -69,7 +147,7 @@ def test_observe_count_rides_along(spark):
     from etl_mssql_to_postgres_dailysync_spark.operators.validate import observe_count
 
     src = fake_orders(spark, 200)
-    observed, obs = observe_count(src.filter(F.col("OrderCreatedAt").isNotNull()), "extract")
+    observed, obs = observe_count(src.filter(F.col("OrderCreatedAt").isNotNull()))
     n_action = observed.count()  # ONE action drives both the count and the metric
     assert obs.get["rows"] == n_action
 

@@ -16,6 +16,10 @@ Usage:
   python tools/dump_plans.py [sf_dir]   # regenerate PLANS.md (builds all plans)
   python tools/dump_plans.py --check    # no Spark: verify PLANS.md covers the
                                         # whole registry (pre-commit mode)
+  SPARK_GRAFT_SF_DIR=<sf_dir> python tools/dump_plans.py --explain <out_dir> <tag> QUERY...
+      # write each query's formatted plan, built at <sf_dir>, to
+      # <out_dir>/<QUERY>_<tag>.txt: the before/after evidence files that
+      # plan claims are checked against
 """
 
 from __future__ import annotations
@@ -123,12 +127,40 @@ def check() -> int:
     return 0
 
 
-def main() -> int:
-    if "--check" in sys.argv[1:]:
-        return check()
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+def _explain(df, mode: str) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+def _spark():
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def explain(out_dir: str, tag: str, names: list[str]) -> int:
+    from etl_mssql_to_postgres_dailysync_spark.plans.driver_queries import QUERIES
+
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
+    os.makedirs(out_dir, exist_ok=True)
+    spark = _spark()
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(_explain(QUERIES[name](spark, sf_dir), "formatted"))
+        print(path)
+    return 0
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    if "--check" in args:
+        return check()
+    if args[:1] == ["--explain"]:
+        if len(args) < 3:
+            raise SystemExit(__doc__)
+        return explain(args[1], args[2], args[3:])
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    spark = _spark()
     from etl_mssql_to_postgres_dailysync_spark.plans.driver_queries import QUERIES
 
     out = [
@@ -153,16 +185,10 @@ def main() -> int:
     plans: dict[str, str] = {}
     for name in QUERIES:
         df = QUERIES[name](spark, sf_dir)
-        plans[name] = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plans[name] = _explain(df, "formatted")
         # fingerprint the SIMPLE tree (formatted mode lists every node twice:
         # once in the tree, once in the numbered detail section)
-        fp = fingerprint(
-            df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "simple"
-            )
-        )
+        fp = fingerprint(_explain(df, "simple"))
         out.append(
             f"| `{name}` | {fp['scans']} | {fp['shuffles']} | {fp['bcasts']} "
             f"| {fp['joins']} | {fp['windows']} | {fp['aggs']} |"
