@@ -8,10 +8,13 @@ module supplies the same guarantees the lake-table formats (Delta Lake,
 Iceberg — public protocol designs) do, in miniature:
 
   * **Commit log**: `_txn_log/<version>.json`, one JSON document per commit
-    holding `add`/`remove` file actions + operation metadata.  The table
-    state at version V is the replay of actions 0..V — data files are
-    immutable and never listed from the filesystem (object-store LIST is
-    both slow and eventually consistent at 100 TB).
+    holding `add`/`remove` file actions, the table schema + operation
+    metadata.  The table state at version V is the replay of actions 0..V
+    (`snapshot`, once per operation) — data files are immutable and never
+    listed from the filesystem (object-store LIST is both slow and
+    eventually consistent at 100 TB).  This module is the only one that
+    knows the log format: the streaming sink and CDC source call its
+    functions.
   * **Atomic, optimistically-concurrent commits**: a commit materializes as
     an atomic hard-link of a fully-written temp file into the next version
     slot; the link fails if the slot is taken.  Blind appends retry on top
@@ -20,14 +23,18 @@ Iceberg — public protocol designs) do, in miniature:
     stale — the caller re-runs on the new head.  (On S3-like stores the
     exclusive-create becomes a CAS against a log service, as in Delta's
     commit coordinators; the protocol is unchanged.)
+  * **Schema from the log**: reads scan with the schema the log recorded
+    for the version read, never one inferred from the parquet footers, so
+    building a read runs no Spark job; columns a file predates read as
+    NULL, and column order is the logged one.
   * **File-level stats pruning (zone maps)**: each `add` records per-file
-    min/max/null-count for the indexed columns, computed with ONE Spark job
-    over the freshly written files.  `read(prune=("col", lo, hi))` skips
-    files whose range cannot overlap — the metadata-driven analog of hive
-    partition pruning, but it also works for value-clustered columns
-    (`cluster_by=` range-partitions the write so ranges stay tight).
+    min/max/null-count for the indexed columns, read from the written files'
+    parquet footers on the driver — zero Spark jobs.  `read(prune=("col",
+    lo, hi))` skips files whose range cannot overlap — the metadata-driven
+    analog of hive partition pruning, but it also works for value-clustered
+    columns (`cluster_by=` range-partitions the write so ranges stay tight).
   * **Time travel**: `read(version=k)` replays the log only to k.
-  * **Checkpoints**: every `checkpoint_interval` commits the full live set
+  * **Checkpoints**: every `CHECKPOINT_INTERVAL` commits the full live set
     is written to `<version>.checkpoint.json`, so snapshot construction is
     O(interval) log reads, not O(history).
   * **Compaction & vacuum**: `compact()` rewrites the live set into few
@@ -46,6 +53,7 @@ import glob
 import json
 import os
 import shutil
+import time
 import uuid
 from dataclasses import dataclass
 from typing import Sequence
@@ -56,6 +64,7 @@ from pyspark.sql.types import StructType
 
 LOG_DIR = "_txn_log"
 LOG_WIDTH = 20
+CHECKPOINT_INTERVAL = 10
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -75,82 +84,133 @@ class AddFile:
     bucket: int | None = None  # hash-bucket id under bucket_spec
 
 
+@dataclass
+class Snapshot:
+    """The table at one version, from one replay of the log."""
+
+    version: int
+    live: dict[str, dict]  # rel_path -> add action
+    schema: dict | None  # StructType JSON; None only before the first commit
+    # CURRENT partition/bucket spec and checks (Iceberg-style spec
+    # evolution: the latest commit that declared a spec wins, but files keep
+    # the metadata of the spec they were written under)
+    props: dict
+
+
 def _version_path(log: str, v: int, checkpoint: bool = False) -> str:
     suffix = ".checkpoint.json" if checkpoint else ".json"
     return os.path.join(log, f"{v:0{LOG_WIDTH}d}{suffix}")
 
 
+def _list_log(table_path: str) -> tuple[list[int], list[int]]:
+    """(commit versions, checkpoint versions) from one listing of the log."""
+    commits, checkpoints = [], []
+    for p in glob.glob(os.path.join(table_path, LOG_DIR, "*.json")):
+        name = os.path.basename(p)
+        v = int(name.split(".")[0])
+        (checkpoints if name.endswith(".checkpoint.json") else commits).append(v)
+    return commits, checkpoints
+
+
+def head_version(table_path: str) -> int:
+    """Head version of the table at ``table_path``, -1 if it has no commits."""
+    return max(_list_log(table_path)[0], default=-1)
+
+
+def read_commit(table_path: str, v: int) -> dict:
+    with open(_version_path(os.path.join(table_path, LOG_DIR), v)) as f:
+        return json.load(f)
+
+
+def snapshot(table_path: str, version: int | None = None) -> Snapshot:
+    """Replay the log to ``version`` (default: the head), starting from the
+    newest checkpoint at or below it."""
+    commits, checkpoints = _list_log(table_path)
+    head = max(commits, default=-1)
+    if version is None:
+        version = head
+    if version > head or version < -1:
+        raise ValueError(f"version {version} out of range (head={head})")
+    start, live, schema, props = 0, {}, None, {}
+    cp = max((v for v in checkpoints if v <= version), default=None)
+    if cp is not None:
+        with open(_version_path(os.path.join(table_path, LOG_DIR), cp,
+                                checkpoint=True)) as f:
+            doc = json.load(f)
+        live = {a["path"]: a for a in doc["live"]}
+        schema, props, start = doc["schema"], doc.get("props", {}), cp + 1
+    for v in range(start, version + 1):
+        c = read_commit(table_path, v)
+        if c.get("schema"):
+            schema = c["schema"]
+        props.update(c.get("props") or {})
+        for action in c["actions"]:
+            if "add" in action:
+                live[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                live.pop(action["remove"]["path"], None)
+    return Snapshot(version, live, schema, props)
+
+
+def footer_stats(fpath: str, cols: Sequence[str]) -> tuple[int, dict]:
+    """(rows, zone maps) of one parquet file, from its footer on the driver:
+    ``{col: {"min", "max", "nulls"}}`` for each of ``cols`` whose every row
+    group carries min/max statistics. Zero Spark jobs (Delta does the same
+    via write-task stats); on an object store this is one ranged GET of the
+    footer, still metadata-scale."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(fpath)
+    col_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    stats = {}
+    for c in cols:
+        if c not in col_idx:
+            continue
+        lo = hi = None
+        nulls = 0
+        ok = True
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(col_idx[c]).statistics
+            if st is None or not st.has_min_max:
+                ok = False
+                break
+            nulls += st.null_count or 0
+            lo = st.min if lo is None or st.min < lo else lo
+            hi = st.max if hi is None or st.max > hi else hi
+        if ok:
+            stats[c] = {"min": _json_safe(lo), "max": _json_safe(hi), "nulls": nulls}
+    return md.num_rows, stats
+
+
+def _write_synced(path: str, doc: dict) -> None:
+    """Write ``doc`` as JSON and fsync it, so the link or rename that
+    publishes it into the log never exposes a torn document after a crash."""
+    with open(path, "w") as f:
+        json.dump(doc, f)
+        f.flush()
+        os.fsync(f.fileno())
+
+
 class TxnTable:
-    def __init__(self, spark: SparkSession, path: str, stats_cols: Sequence[str] = (),
-                 checkpoint_interval: int = 10):
+    def __init__(self, spark: SparkSession, path: str, stats_cols: Sequence[str] = ()):
         self.spark = spark
         self.path = os.path.abspath(path)
         self.log = os.path.join(self.path, LOG_DIR)
         self.stats_cols = list(stats_cols)
-        self.checkpoint_interval = checkpoint_interval
         os.makedirs(self.log, exist_ok=True)
 
     # ---------------------------------------------------------------- log --
 
     def version(self) -> int:
         """Head version, -1 if the table has no commits."""
-        vs = [int(os.path.basename(p).split(".")[0])
-              for p in glob.glob(os.path.join(self.log, "*.json"))
-              if not p.endswith(".checkpoint.json")]
-        return max(vs, default=-1)
-
-    def _read_commit(self, v: int) -> dict:
-        with open(_version_path(self.log, v)) as f:
-            return json.load(f)
+        return head_version(self.path)
 
     def history(self) -> list[dict]:
         return [
             {k: c[k] for k in ("version", "op", "meta")}
             for v in range(self.version() + 1)
-            for c in [self._read_commit(v)]
+            for c in [read_commit(self.path, v)]
         ]
-
-    def _snapshot(self, version: int | None = None) -> tuple[dict[str, dict], dict | None]:
-        """Replay the log to ``version``: {rel_path: add_action}, schema."""
-        live, schema, _ = self._snapshot_full(version)
-        return live, schema
-
-    def _snapshot_full(
-        self, version: int | None = None
-    ) -> tuple[dict[str, dict], dict | None, dict]:
-        """Replay to ``version``: (live files, schema, table properties).
-
-        Properties carry the CURRENT partition/bucket spec (Iceberg-style
-        spec evolution: the latest commit that declared a spec wins, but
-        files keep the metadata of the spec they were written under)."""
-        head = self.version()
-        if version is None:
-            version = head
-        if version > head or version < -1:
-            raise ValueError(f"version {version} out of range (head={head})")
-        start, live, schema, props = 0, {}, None, {}
-        # start from the newest checkpoint at or below the target version
-        for v in range(version, -1, -1):
-            cp = _version_path(self.log, v, checkpoint=True)
-            if os.path.exists(cp):
-                with open(cp) as f:
-                    snap = json.load(f)
-                live = {a["path"]: a for a in snap["live"]}
-                schema = snap["schema"]
-                props = snap.get("props", {})
-                start = v + 1
-                break
-        for v in range(start, version + 1):
-            c = self._read_commit(v)
-            if c.get("schema"):
-                schema = c["schema"]
-            props.update(c.get("props") or {})
-            for action in c["actions"]:
-                if "add" in action:
-                    live[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
-        return live, schema, props
 
     def version_at(self, ts: float) -> int:
         """Newest version committed at-or-before the wall-clock timestamp
@@ -159,7 +219,7 @@ class TxnTable:
         head = self.version()
         best = -1
         for v in range(head + 1):
-            if self._read_commit(v).get("ts", float("inf")) <= ts:
+            if read_commit(self.path, v).get("ts", float("inf")) <= ts:
                 best = v
             else:
                 break  # commit timestamps are monotone (single log)
@@ -174,13 +234,13 @@ class TxnTable:
 
     def partition_spec(self, version: int | None = None) -> list[str]:
         """Current identity-partition columns ([] = unpartitioned)."""
-        return self._snapshot_full(version)[2].get("partition_spec", [])
+        return snapshot(self.path, version).props.get("partition_spec", [])
 
     # -------------------------------------------------------- constraints --
 
     def checks(self, version: int | None = None) -> dict[str, str]:
         """Active CHECK constraints: {name: sql_predicate}."""
-        return dict(self._snapshot_full(version)[2].get("checks", {}))
+        return dict(snapshot(self.path, version).props.get("checks", {}))
 
     def set_check(self, name: str, predicate: str) -> int:
         """ADD/replace a CHECK constraint (Delta ``ALTER TABLE … ADD
@@ -189,23 +249,21 @@ class TxnTable:
         on each write validates only its own incoming rows — the historical
         data is already known-good, so enforcement cost stays proportional
         to the write, not the table."""
-        base = self.version()
-        live, schema, props = self._snapshot_full(base)
-        if live:
+        snap = snapshot(self.path)
+        if snap.live:
             self._enforce({name: predicate},
-                          self._read_add_files(list(live.values()), schema))
-        checks = dict(props.get("checks", {}))
+                          self._read_add_files(list(snap.live.values()), snap.schema))
+        checks = dict(snap.props.get("checks", {}))
         checks[name] = predicate
-        return self._commit("set_check", [], base + 1, schema,
+        return self._commit("set_check", [], snap.version + 1, snap.schema,
                             {"name": name, "predicate": predicate},
                             props={"checks": checks})
 
     def drop_check(self, name: str) -> int:
-        base = self.version()
-        _, schema, props = self._snapshot_full(base)
-        checks = dict(props.get("checks", {}))
+        snap = snapshot(self.path)
+        checks = dict(snap.props.get("checks", {}))
         checks.pop(name, None)
-        return self._commit("drop_check", [], base + 1, schema,
+        return self._commit("drop_check", [], snap.version + 1, snap.schema,
                             {"name": name}, props={"checks": checks})
 
     def _enforce(self, checks: dict[str, str], df: DataFrame) -> None:
@@ -230,13 +288,11 @@ class TxnTable:
 
     def bucket_spec(self, version: int | None = None) -> dict | None:
         """Current hash-bucket layout, e.g. {"col": "k", "n": 8}, or None."""
-        return self._snapshot_full(version)[2].get("bucket_spec")
+        return snapshot(self.path, version).props.get("bucket_spec")
 
     def _commit(self, op: str, actions: list[dict], expected_version: int,
                 schema: dict | None, meta: dict | None = None,
                 props: dict | None = None) -> int:
-        import time
-
         tmp = os.path.join(self.log, f".tmp-{uuid.uuid4().hex}")
         doc = {"op": op, "actions": actions, "schema": schema, "meta": meta or {},
                "props": props or {}, "ts": time.time()}
@@ -244,15 +300,12 @@ class TxnTable:
         try:
             while True:
                 doc["version"] = v
-                with open(tmp, "w") as f:
-                    json.dump(doc, f)
-                    f.flush()
-                    os.fsync(f.fileno())
+                _write_synced(tmp, doc)
                 try:
                     os.link(tmp, _version_path(self.log, v))  # atomic exclusive publish
                     break
                 except FileExistsError:
-                    if op in ("append", "stream_append"):  # blind appends commute
+                    if op in ("append", "stream_append"):
                         v += 1  # blind appends commute: retry on the new head
                     else:
                         raise ConcurrentWriteError(
@@ -261,14 +314,11 @@ class TxnTable:
         finally:
             if os.path.exists(tmp):
                 os.unlink(tmp)
-        if v % self.checkpoint_interval == 0 and v > 0:
-            live, schema_now, props_now = self._snapshot_full(v)
-            cp_doc = {"version": v, "live": list(live.values()), "schema": schema_now,
-                      "props": props_now}
-            cp_tmp = tmp + ".cp"
-            with open(cp_tmp, "w") as f:
-                json.dump(cp_doc, f)
-            os.replace(cp_tmp, _version_path(self.log, v, checkpoint=True))
+        if v % CHECKPOINT_INTERVAL == 0 and v > 0:
+            snap = snapshot(self.path, v)
+            _write_synced(tmp, {"version": v, "live": list(snap.live.values()),
+                                "schema": snap.schema, "props": snap.props})
+            os.replace(tmp, _version_path(self.log, v, checkpoint=True))
         return v
 
     # -------------------------------------------------------------- write --
@@ -278,7 +328,7 @@ class TxnTable:
                      partition_by: Sequence[str] | None = None,
                      bucket_by: dict | None = None) -> list[dict]:
         """Write df as immutable parquet files under a fresh commit dir and
-        return their add-actions with per-file stats (one Spark job each).
+        return their add-actions with per-file stats (``footer_stats``).
 
         ``partition_by`` writes hive-layout identity partitions; each file's
         partition values are parsed from its path into the add-action, so
@@ -312,11 +362,6 @@ class TxnTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(commit_dir)
-        # Per-file rows + min/max/null-count come from the parquet FOOTERS on
-        # the driver — zero extra Spark jobs per commit (Delta does the same
-        # via write-task stats). On an object store this is one ranged GET of
-        # each footer, still metadata-scale.
-        import pyarrow.parquet as pq
         from urllib.parse import unquote
 
         files = sorted(
@@ -327,29 +372,10 @@ class TxnTable:
         )
         actions = []
         for fpath in files:
-            md = pq.ParquetFile(fpath).metadata
-            col_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            stats = {}
-            for c in self.stats_cols:
-                if c not in col_idx:
-                    continue
-                lo = hi = None
-                nulls = 0
-                ok = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(col_idx[c]).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    nulls += st.null_count or 0
-                    lo = st.min if lo is None or st.min < lo else lo
-                    hi = st.max if hi is None or st.max > hi else hi
-                if ok:
-                    stats[c] = {"min": _json_safe(lo), "max": _json_safe(hi),
-                                "nulls": nulls}
+            rows, stats = footer_stats(fpath, self.stats_cols)
             add = {
                 "path": os.path.relpath(fpath, self.path),
-                "rows": md.num_rows,
+                "rows": rows,
                 "bytes": os.path.getsize(fpath),
                 "stats": stats,
             }
@@ -370,75 +396,73 @@ class TxnTable:
             actions.append({"add": add})
         return actions
 
-    def _check_schema(self, df: DataFrame, merge_schema: bool) -> None:
-        """Delta-style strictness: widening the schema (new columns) needs an
-        explicit ``merge_schema=True``; silent drift is an error. Removed
-        columns are always rejected (old files can't grow data back)."""
-        _, stored = self._snapshot()
-        if stored is None:
-            return
-        old_cols = {f["name"] for f in stored["fields"]}
-        new_cols = set(df.columns)
-        if old_cols - new_cols:
-            raise ValueError(f"schema removes columns {sorted(old_cols - new_cols)}")
-        if (new_cols - old_cols) and not merge_schema:
-            raise ValueError(
-                f"schema adds columns {sorted(new_cols - old_cols)}; "
-                "pass merge_schema=True to evolve"
-            )
+    def _rewrite(self, op: str, snap: Snapshot, removed: Sequence[str],
+                 df: DataFrame, meta: dict | None = None, *, check: bool = True,
+                 schema: dict | None = None,
+                 cluster_by: Sequence[str] | None = None,
+                 zorder_by: Sequence[str] | None = None,
+                 partition_by: Sequence[str] | None = None,
+                 bucket_by: dict | None = None) -> int:
+        """The copy-on-write commit every write shares: remove the ``removed``
+        live files of ``snap``, write ``df`` as new files and commit both at
+        ``snap.version + 1`` with ``schema`` (default: ``df``'s).
+
+        ``partition_by``/``bucket_by`` both lay out THIS write and evolve the
+        table's current spec (recorded in commit props — old files keep the
+        spec they were written under, Iceberg-style). Omitting them keeps the
+        current spec. ``check`` enforces the table's CHECK constraints on
+        ``df`` before anything is written."""
+        props = {}
+        if partition_by is not None:
+            props["partition_spec"] = list(partition_by)
+        if bucket_by is not None:
+            props["bucket_spec"] = {"col": bucket_by["col"], "n": int(bucket_by["n"])}
+        spec = {**snap.props, **props}
+        if check:
+            self._enforce(spec.get("checks", {}), df)
+        actions = [{"remove": _remove_action(snap.live[p])} for p in removed]
+        actions += self._write_files(df, cluster_by, zorder_by,
+                                     partition_by=spec.get("partition_spec") or None,
+                                     bucket_by=spec.get("bucket_spec"))
+        return self._commit(op, actions, snap.version + 1,
+                            schema or df.schema.jsonValue(), meta, props or None)
 
     def append(self, df: DataFrame, cluster_by: Sequence[str] | None = None,
                meta: dict | None = None, zorder_by: Sequence[str] | None = None,
                merge_schema: bool = False,
                partition_by: Sequence[str] | None = None,
                bucket_by: dict | None = None) -> int:
-        """Append; ``partition_by``/``bucket_by`` both layout THIS write and
-        evolve the table's current spec (recorded in commit props — old files
-        keep the spec they were written under, Iceberg-style). Omitting them
-        keeps the current spec: an existing partition spec is applied to the
-        incoming batch automatically."""
-        self._check_schema(df, merge_schema)
-        props = {}
-        if partition_by is not None:
-            props["partition_spec"] = list(partition_by)
-        if bucket_by is not None:
-            props["bucket_spec"] = {"col": bucket_by["col"], "n": int(bucket_by["n"])}
-        cur = self._snapshot_full()[2]
-        self._enforce(cur.get("checks", {}), df)
-        eff_partition = (
-            list(partition_by) if partition_by is not None
-            else cur.get("partition_spec", [])
-        )
-        eff_bucket = bucket_by if bucket_by is not None else cur.get("bucket_spec")
-        adds = self._write_files(df, cluster_by, zorder_by,
-                                 partition_by=eff_partition or None,
-                                 bucket_by=eff_bucket)
-        return self._commit("append", adds, self.version() + 1,
-                            df.schema.jsonValue(), meta, props or None)
+        """Append; ``partition_by``/``bucket_by`` evolve the layout as in
+        ``_rewrite`` — an existing partition spec is applied to the incoming
+        batch automatically.
+
+        Delta-style schema strictness: widening the schema (new columns)
+        needs an explicit ``merge_schema=True``; silent drift is an error.
+        Removed columns are always rejected (old files can't grow data
+        back)."""
+        snap = snapshot(self.path)
+        if snap.schema is not None:
+            old_cols = {f["name"] for f in snap.schema["fields"]}
+            new_cols = set(df.columns)
+            if old_cols - new_cols:
+                raise ValueError(f"schema removes columns {sorted(old_cols - new_cols)}")
+            if (new_cols - old_cols) and not merge_schema:
+                raise ValueError(
+                    f"schema adds columns {sorted(new_cols - old_cols)}; "
+                    "pass merge_schema=True to evolve"
+                )
+        return self._rewrite("append", snap, [], df, meta, cluster_by=cluster_by,
+                             zorder_by=zorder_by, partition_by=partition_by,
+                             bucket_by=bucket_by)
 
     def overwrite(self, df: DataFrame, cluster_by: Sequence[str] | None = None,
                   meta: dict | None = None,
                   partition_by: Sequence[str] | None = None,
                   bucket_by: dict | None = None) -> int:
-        base = self.version()
-        live, _, cur = self._snapshot_full(base)
-        self._enforce(cur.get("checks", {}), df)
-        props = {}
-        if partition_by is not None:
-            props["partition_spec"] = list(partition_by)
-        if bucket_by is not None:
-            props["bucket_spec"] = {"col": bucket_by["col"], "n": int(bucket_by["n"])}
-        eff_partition = (
-            list(partition_by) if partition_by is not None
-            else cur.get("partition_spec", [])
-        )
-        eff_bucket = bucket_by if bucket_by is not None else cur.get("bucket_spec")
-        actions = [{"remove": _remove_action(a)} for a in live.values()]
-        actions += self._write_files(df, cluster_by,
-                                     partition_by=eff_partition or None,
-                                     bucket_by=eff_bucket)
-        return self._commit("overwrite", actions, base + 1, df.schema.jsonValue(),
-                            meta, props or None)
+        snap = snapshot(self.path)
+        return self._rewrite("overwrite", snap, list(snap.live), df, meta,
+                             cluster_by=cluster_by, partition_by=partition_by,
+                             bucket_by=bucket_by)
 
     def merge(self, source: DataFrame, keys: Sequence[str],
               cluster_by: Sequence[str] | None = None,
@@ -465,10 +489,9 @@ class TxnTable:
         the buckets its keys hash into."""
         from etl_mssql_to_postgres_dailysync_spark.operators.merge import merge as rel_merge
 
-        base = self.version()
-        live, _, props = self._snapshot_full(base)
-        bspec = props.get("bucket_spec")
-        pspec = props.get("partition_spec", [])
+        snap = snapshot(self.path)
+        live = snap.live
+        bspec = snap.props.get("bucket_spec")
         if prune_col is None and bspec and bspec["col"] in keys:
             ids = {
                 r[0]
@@ -476,87 +499,66 @@ class TxnTable:
                     F.pmod(F.hash(F.col(bspec["col"])), F.lit(int(bspec["n"])))
                 ).distinct().collect()
             }
-            touched = {
+            touched = [
                 p for p, a in live.items()
                 if a.get("bucket") is None
                 or a.get("bucket_spec") != bspec
                 or a["bucket"] in ids
-            }
-            target = self._read_add_files(
-                [live[p] for p in touched], self._snapshot(base)[1]
-            )
+            ]
         elif prune_col is not None:
             lohi = source.agg(
                 F.min(F.col(prune_col)).alias("lo"), F.max(F.col(prune_col)).alias("hi")
             ).first()
-            touched = {f.path for f in self.files(base, prune=(prune_col,
-                       _json_safe(lohi["lo"]), _json_safe(lohi["hi"])))}
-            target = self._read_add_files(
-                [live[p] for p in touched], self._snapshot(base)[1]
-            )
+            touched = [a["path"] for a in _pruned(live, (
+                prune_col, _json_safe(lohi["lo"]), _json_safe(lohi["hi"])))]
         else:
-            touched = set(live.keys())
-            target = self.read(version=base)
+            touched = list(live)
+        target = self._read_add_files([live[p] for p in touched], snap.schema)
         merged = rel_merge(target, source, keys, **merge_kwargs).df
-        self._enforce(props.get("checks", {}), merged)
-        actions = [{"remove": _remove_action(live[p])} for p in touched]
-        actions += self._write_files(merged, cluster_by,
-                                     partition_by=pspec or None, bucket_by=bspec)
-        return self._commit("merge", actions, base + 1, merged.schema.jsonValue(),
-                            {"keys": list(keys), "files_rewritten": len(touched),
-                             "files_kept": len(live) - len(touched)})
+        return self._rewrite("merge", snap, touched, merged,
+                             {"keys": list(keys), "files_rewritten": len(touched),
+                              "files_kept": len(live) - len(touched)},
+                             cluster_by=cluster_by)
 
-    def delete(self, condition, prune_col: str | None = None) -> int:
+    def delete(self, condition) -> int:
         """DELETE rows matching ``condition`` (a Column predicate) — the
         copy-on-write erasure op (GDPR right-to-be-forgotten, bad-batch
-        rollback): matching files rewrite WITHOUT the matching rows,
-        untouched files stay in the snapshot as-is.
-
-        With ``prune_col`` + a range-expressible condition, pass the bounds
-        via ``prune_col=(col, lo, hi)`` style tuples through ``files()``;
-        here the simpler contract: if ``prune_col`` is given, only files
-        whose zone maps admit rows matching the condition are CANDIDATES for
-        rewrite — callers provide the prune bounds by first computing them.
-        Without it, candidates are determined by actually testing each
-        file's rows (still file-granular: files with zero matches are kept
-        by PATH, not rewritten — the rewrite set is exactly the files that
-        contain matches).
+        rollback): the rewrite set is exactly the files that contain matches
+        (``_files_matching``); those rewrite WITHOUT the matching rows, files
+        with zero matches stay in the snapshot by PATH.
 
         Physical erasure completes at vacuum(): like Delta, the old files
         remain for time travel until the retention window passes."""
-        base = self.version()
-        live, schema, props = self._snapshot_full(base)
-        touched = self._files_matching(condition, live, schema)
+        snap = snapshot(self.path)
+        touched = self._files_matching(condition, snap)
         if not touched:
-            return base  # nothing matches; no commit needed
+            return snap.version  # nothing matches; no commit needed
         # SQL DELETE semantics: remove rows where the condition is TRUE;
         # rows where it is NULL/UNKNOWN are KEPT. A bare ~condition drops
         # them (mixed_null_keys fixture find: a GDPR delete on user_id ==
         # victim silently destroyed the NULL-keyed rows of every rewritten
         # file — and WHICH rows died depended on the file layout, so the
         # corruption was nondeterministic across sessions).
-        keep = self._read_add_files([live[p] for p in touched], schema).filter(
+        keep = self._read_add_files([snap.live[p] for p in touched], snap.schema).filter(
             ~F.coalesce(condition, F.lit(False))
         )
-        actions = [{"remove": _remove_action(live[p])} for p in touched]
-        actions += self._write_files(
-            keep, None, partition_by=props.get("partition_spec") or None,
-            bucket_by=props.get("bucket_spec"))
-        return self._commit("delete", actions, base + 1, schema,
-                            {"files_rewritten": len(touched),
-                             "files_kept": len(live) - len(touched)})
+        # kept rows already passed every check: none is enforced again
+        return self._rewrite("delete", snap, touched, keep,
+                             {"files_rewritten": len(touched),
+                              "files_kept": len(snap.live) - len(touched)},
+                             check=False, schema=snap.schema)
 
-    def _files_matching(self, condition, live: dict, schema) -> list[str]:
+    def _files_matching(self, condition, snap: Snapshot) -> list[str]:
         """Relative paths of live files containing >=1 row matching
         ``condition`` — ONE job (input_file_name per matching row,
         distinct), never a per-file probe loop."""
         from urllib.parse import unquote, urlparse
 
-        full = self._read_add_files(list(live.values()), schema)
+        full = self._read_add_files(list(snap.live.values()), snap.schema)
         hit_uris = [r[0] for r in full.filter(condition)
                     .select(F.input_file_name()).distinct().collect()]
         hit_paths = {unquote(urlparse(u).path) for u in hit_uris}
-        return [p for p in live if os.path.join(self.path, p) in hit_paths]
+        return [p for p in snap.live if os.path.join(self.path, p) in hit_paths]
 
     def update(self, condition, set: dict) -> int:
         """UPDATE rows matching ``condition``: per column in ``set``, matching
@@ -568,12 +570,11 @@ class TxnTable:
         ``set`` maps column name -> Column/literal; each result is cast back
         to the column's existing type so the table schema is invariant under
         update (an UPDATE is data motion, never schema motion)."""
-        base = self.version()
-        live, schema, props = self._snapshot_full(base)
-        touched = self._files_matching(condition, live, schema)
+        snap = snapshot(self.path)
+        touched = self._files_matching(condition, snap)
         if not touched:
-            return base
-        df = self._read_add_files([live[p] for p in touched], schema)
+            return snap.version
+        df = self._read_add_files([snap.live[p] for p in touched], snap.schema)
         types = dict(df.dtypes)
         unknown = [c for c in set if c not in types]
         if unknown:
@@ -583,15 +584,11 @@ class TxnTable:
                 .otherwise(F.col(c)).cast(types[c])
             for c, v in set.items()
         })
-        self._enforce(props.get("checks", {}), updated)
-        actions = [{"remove": _remove_action(live[p])} for p in touched]
-        actions += self._write_files(
-            updated, None, partition_by=props.get("partition_spec") or None,
-            bucket_by=props.get("bucket_spec"))
-        return self._commit("update", actions, base + 1, schema,
-                            {"set_columns": sorted(set),
-                             "files_rewritten": len(touched),
-                             "files_kept": len(live) - len(touched)})
+        return self._rewrite("update", snap, touched, updated,
+                             {"set_columns": sorted(set),
+                              "files_rewritten": len(touched),
+                              "files_kept": len(snap.live) - len(touched)},
+                             schema=snap.schema)
 
     def restore(self, version: int) -> int:
         """RESTORE the table to an earlier snapshot (Delta ``RESTORE TABLE …
@@ -600,27 +597,27 @@ class TxnTable:
         rewrite, and itself time-travelable (restoring a restore works).
 
         Fails if any file of the target snapshot was already vacuumed."""
-        base = self.version()
-        want, schema, props = self._snapshot_full(version)
+        head = snapshot(self.path)
+        target = snapshot(self.path, version)
+        want, live = target.live, head.live
         missing = [p for p in want
                    if not os.path.exists(os.path.join(self.path, p))]
         if missing:
             raise ValueError(
                 f"cannot restore to v{version}: {len(missing)} file(s) "
                 f"vacuumed, e.g. {missing[0]}")
-        live, _, _ = self._snapshot_full(base)
         actions = [{"remove": _remove_action(live[p])}
                    for p in live if p not in want]
         actions += [{"add": want[p]} for p in want if p not in live]
         return self._commit(
-            "restore", actions, base + 1, schema,
+            "restore", actions, head.version + 1, target.schema,
             {"restored_to": version,
              "files_added": sum(1 for p in want if p not in live),
              "files_removed": sum(1 for p in live if p not in want)},
             # explicit reset: the TARGET's layout wins even when the target
             # predates a later spec evolution (absent key would not clear it)
-            props={"partition_spec": props.get("partition_spec", []),
-                   "bucket_spec": props.get("bucket_spec")})
+            props={"partition_spec": target.props.get("partition_spec", []),
+                   "bucket_spec": target.props.get("bucket_spec")})
 
     def compact(self, num_files: int | None = None, target_mb: int | None = None) -> int:
         """Rewrite the live set into ``num_files`` files (bin-packing OPTIMIZE);
@@ -632,23 +629,18 @@ class TxnTable:
         ceil(live_bytes / target) — the small-file compactor needs no data
         scan to plan itself (the OPTIMIZE file-size heuristic every lakehouse
         runs on manifest stats)."""
-        base = self.version()
-        live, _, props = self._snapshot_full(base)
-        pspec = props.get("partition_spec", [])
-        bspec = props.get("bucket_spec")
+        snap = snapshot(self.path)
         if num_files is None:
             if target_mb is not None:
-                total = sum(a.get("bytes", 0) for a in live.values())
+                total = sum(a.get("bytes", 0) for a in snap.live.values())
                 num_files = max(1, -(-total // (target_mb * 1024 * 1024)))
             else:
                 num_files = 1
-        df = self.read()
-        if not bspec:
+        df = self._read_add_files(list(snap.live.values()), snap.schema)
+        if not snap.props.get("bucket_spec"):
             df = df.coalesce(num_files)
-        actions = [{"remove": _remove_action(a)} for a in live.values()]
-        actions += self._write_files(df, None, partition_by=pspec or None,
-                                     bucket_by=bspec)
-        return self._commit("compact", actions, base + 1, df.schema.jsonValue())
+        # same rows, already checked when they were written
+        return self._rewrite("compact", snap, list(snap.live), df, check=False)
 
     # --------------------------------------------------------------- read --
 
@@ -656,92 +648,48 @@ class TxnTable:
               prune: tuple | list | None = None) -> list[AddFile]:
         """Live files at ``version``, optionally zone-map-pruned by
         ``(col, lo, hi)`` predicates (lo/hi inclusive, None = unbounded)."""
-        live, _ = self._snapshot(version)
-        preds = []
-        if prune:
-            preds = [prune] if isinstance(prune, tuple) else list(prune)
-        out = []
-        for a in live.values():
-            keep = True
-            for col, lo, hi in preds:
-                pv = a.get("partition_values") or {}
-                if col in pv and pv[col] is not None:
-                    # identity-partition value: exact containment check
-                    v = pv[col]
-                    if (hi is not None and str_cmp(v, hi) > 0) or (
-                        lo is not None and str_cmp(v, lo) < 0
-                    ):
-                        keep = False
-                        break
-                    continue
-                st = a.get("stats", {}).get(col)
-                if st is None or st["min"] is None:
-                    continue  # no stats -> cannot prune, must read
-                if (hi is not None and str_cmp(st["min"], hi) > 0) or (
-                    lo is not None and str_cmp(st["max"], lo) < 0
-                ):
-                    keep = False
-                    break
-            if keep:
-                out.append(AddFile(a["path"], a["rows"], a.get("stats", {}),
-                                   a.get("partition_values"), a.get("bucket")))
-        return out
+        return [
+            AddFile(a["path"], a["rows"], a.get("stats", {}),
+                    a.get("partition_values"), a.get("bucket"))
+            for a in _pruned(snapshot(self.path, version).live, prune)
+        ]
 
-    def _read_add_files(self, adds: list, schema: dict | None) -> DataFrame:
-        """Scan a set of add-actions/AddFiles as one DataFrame.
+    def _read_add_files(self, adds: list[dict], schema: dict | None) -> DataFrame:
+        """Scan a set of add-actions as one DataFrame with the logged
+        ``schema``: the scan is declared, not inferred from the footers, so
+        building it runs no Spark job; columns a file predates read as NULL
+        and the columns come in logged order.
 
         Hive-layout files don't store their partition columns in the data;
         re-attach them as literals from LOG metadata (never by re-parsing
         paths at scan time). One scan per distinct partition tuple — a
         spec-evolution read unions the per-spec scans, so each branch still
         gets pushdown/pruning independently."""
-        fs = [
-            a if isinstance(a, AddFile)
-            else AddFile(a["path"], a["rows"], a.get("stats", {}),
-                         a.get("partition_values"), a.get("bucket"))
-            for a in adds
-        ]
-        if not fs:
-            st = StructType.fromJson(schema) if schema else StructType([])
-            return self.spark.createDataFrame([], st)
-        groups: dict[tuple, list[AddFile]] = {}
-        for f in fs:
-            key = tuple(sorted((f.partition_values or {}).items()))
-            groups.setdefault(key, []).append(f)
-        stype = StructType.fromJson(schema) if schema else None
+        stype = StructType.fromJson(schema) if schema else StructType([])
+        if not adds:
+            return self.spark.createDataFrame([], stype)
+        groups: dict[tuple, list[str]] = {}
+        for a in adds:
+            key = tuple(sorted((a.get("partition_values") or {}).items()))
+            groups.setdefault(key, []).append(os.path.join(self.path, a["path"]))
         parts = []
-        for key, members in sorted(groups.items(), key=lambda kv: str(kv[0])):
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, m.path) for m in members]
-            )
-            for col, val in key:
-                if col not in df.columns:
-                    typ = stype[col].dataType if stype and col in stype.names else None
-                    lit = F.lit(val)
-                    df = df.withColumn(col, lit.cast(typ) if typ else lit)
-            parts.append(df)
+        for key, paths in sorted(groups.items(), key=lambda kv: str(kv[0])):
+            pv = dict(key)
+            data = StructType([f for f in stype.fields if f.name not in pv])
+            df = self.spark.read.schema(data).parquet(*paths)
+            parts.append(df.select(*[
+                F.lit(pv[f.name]).cast(f.dataType).alias(f.name) if f.name in pv
+                else F.col(f.name)
+                for f in stype.fields
+            ]))
         df = parts[0]
         for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
+            df = df.union(p)
         return df
 
     def read(self, version: int | None = None, prune=None) -> DataFrame:
-        _, schema = self._snapshot(version)
-        fs = self.files(version, prune)
-        df = self._read_add_files(fs, schema)
-        # project to the committed schema at this version: columns added by a
-        # later schema evolution read as NULL from pre-evolution files, and
-        # column ORDER is the logged one, not parquet-footer order
-        if schema and fs:
-            cols = [f["name"] for f in schema["fields"]]
-            df = df.select(*[
-                F.col(c) if c in df.columns
-                else F.lit(None).cast(
-                    StructType.fromJson(schema)[c].dataType
-                ).alias(c)
-                for c in cols
-            ])
-        return df
+        snap = snapshot(self.path, version)
+        return self._read_add_files(_pruned(snap.live, prune), snap.schema)
 
     # ----------------------------------------------------- metadata views --
 
@@ -779,10 +727,13 @@ class TxnTable:
         [head - retain_versions, head].  Destroys time travel before that
         horizon (like Delta VACUUM's retention window)."""
         head = self.version()
-        referenced: set[str] = set()
-        for v in range(max(0, head - retain_versions), head + 1):
-            live, _ = self._snapshot(v)
-            referenced.update(live.keys())
+        lo = max(-1, head - retain_versions)
+        # a file live at any retained version is live at the oldest one or
+        # added by a later retained commit
+        referenced = set(snapshot(self.path, lo).live)
+        for v in range(lo + 1, head + 1):
+            referenced.update(a["add"]["path"] for a in read_commit(self.path, v)["actions"]
+                              if "add" in a)
         deleted = []
         data_root = os.path.join(self.path, "data")
         for r, _, fns in os.walk(data_root):
@@ -799,6 +750,40 @@ class TxnTable:
             if r != data_root and not os.listdir(r):
                 shutil.rmtree(r)
         return deleted
+
+
+def _pruned(live: dict[str, dict], prune: tuple | list | None) -> list[dict]:
+    """The add-actions of ``live`` that ``(col, lo, hi)`` predicates (lo/hi
+    inclusive, None = unbounded) cannot rule out by partition value or
+    zone map."""
+    preds = []
+    if prune:
+        preds = [prune] if isinstance(prune, tuple) else list(prune)
+    out = []
+    for a in live.values():
+        keep = True
+        for col, lo, hi in preds:
+            pv = a.get("partition_values") or {}
+            if col in pv and pv[col] is not None:
+                # identity-partition value: exact containment check
+                v = pv[col]
+                if (hi is not None and str_cmp(v, hi) > 0) or (
+                    lo is not None and str_cmp(v, lo) < 0
+                ):
+                    keep = False
+                    break
+                continue
+            st = a.get("stats", {}).get(col)
+            if st is None or st["min"] is None:
+                continue  # no stats -> cannot prune, must read
+            if (hi is not None and str_cmp(st["min"], hi) > 0) or (
+                lo is not None and str_cmp(st["max"], lo) < 0
+            ):
+                keep = False
+                break
+        if keep:
+            out.append(a)
+    return out
 
 
 def _remove_action(add: dict) -> dict:

@@ -34,7 +34,6 @@ README.md:78).  This module supplies the missing capability Spark-first:
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator, Sequence
 
@@ -46,8 +45,9 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import (
-    LOG_DIR,
-    _version_path,
+    head_version,
+    read_commit,
+    snapshot,
 )
 
 
@@ -58,23 +58,6 @@ class _ChangedFile(InputPartition):
         self.sign = sign
         self.version = version
         self.partition_values = partition_values or {}
-
-
-def _log_head(table_path: str) -> int:
-    import glob
-
-    log = os.path.join(table_path, LOG_DIR)
-    vs = [
-        int(os.path.basename(p).split(".")[0])
-        for p in glob.glob(os.path.join(log, "*.json"))
-        if not p.endswith(".checkpoint.json")
-    ]
-    return max(vs, default=-1)
-
-
-def _read_commit(table_path: str, v: int) -> dict:
-    with open(_version_path(os.path.join(table_path, LOG_DIR), v)) as f:
-        return json.load(f)
 
 
 class TxnTableCdcStreamReader(DataSourceStreamReader):
@@ -88,12 +71,12 @@ class TxnTableCdcStreamReader(DataSourceStreamReader):
         return self._initial
 
     def latestOffset(self) -> dict:
-        return {"version": _log_head(self.table_path)}
+        return {"version": head_version(self.table_path)}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         parts: list[InputPartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            commit = _read_commit(self.table_path, v)
+            commit = read_commit(self.table_path, v)
             for action in commit["actions"]:
                 if "add" in action:
                     a = action["add"]
@@ -148,13 +131,7 @@ class TxnTableCdcDataSource(DataSource):
 
     def schema(self) -> StructType:
         table_path = os.path.abspath(self.options["path"])
-        head = _log_head(table_path)
-        schema = None
-        for v in range(head, -1, -1):
-            c = _read_commit(table_path, v)
-            if c.get("schema"):
-                schema = c["schema"]
-                break
+        schema = snapshot(table_path).schema
         if schema is None:
             raise ValueError(f"no committed schema in {table_path}")
         base = StructType.fromJson(schema)

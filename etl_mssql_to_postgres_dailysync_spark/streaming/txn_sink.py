@@ -35,7 +35,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable, footer_stats
 
 
 @dataclass
@@ -76,46 +76,17 @@ class TxnTableStreamWriter(DataSourceStreamArrowWriter):
         # is needed for version()/history()/_commit()
         return TxnTable(None, self.table_path)
 
-    def _file_stats(self, rel_path: str) -> dict:
-        """Per-file zone-map stats from the parquet footer (the same
-        metadata-only read _write_files does), for the columns named in the
-        ``statsCols`` option — stream-landed files prune like batch ones."""
-        cols = [c.strip() for c in self.options.get("statscols", "").split(",") if c.strip()]
-        if not cols:
-            return {}
-        import pyarrow.parquet as pq
-
-        from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import _json_safe
-
-        md = pq.ParquetFile(os.path.join(self.table_path, rel_path)).metadata
-        col_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        stats = {}
-        for c in cols:
-            if c not in col_idx:
-                continue
-            lo = hi = None
-            nulls = 0
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx[c]).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                nulls += st.null_count or 0
-                lo = st.min if lo is None or st.min < lo else lo
-                hi = st.max if hi is None or st.max > hi else hi
-            if ok:
-                stats[c] = {"min": _json_safe(lo), "max": _json_safe(hi), "nulls": nulls}
-        return stats
-
     def commit(self, messages, batchId: int) -> None:
         t = self._table()
         for h in t.history():
             if h["op"] == "stream_append" and h["meta"].get("batchId") == batchId:
                 return  # replayed micro-batch: already committed, skip
+        # zone maps for the ``statsCols`` option, from the same footer read
+        # batch writes use: stream-landed files prune like batch ones
+        cols = [c.strip() for c in self.options.get("statscols", "").split(",") if c.strip()]
         adds = [
             {"add": {"path": m.path, "rows": m.rows, "bytes": m.bytes,
-                     "stats": self._file_stats(m.path)}}
+                     "stats": footer_stats(os.path.join(self.table_path, m.path), cols)[1]}}
             for m in messages
             if m is not None and m.path is not None
         ]

@@ -603,6 +603,10 @@ class TestSinkConcurrency:
         assert t.read().count() == 15
 
     def test_stream_landed_files_carry_zone_maps(self, spark, sf_dir, base):
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import footer_stats
         from etl_mssql_to_postgres_dailysync_spark.streaming.txn_sink import (
             TxnTableSinkDataSource,
         )
@@ -625,5 +629,13 @@ class TestSinkConcurrency:
         t = TxnTable(spark, tbl)
         fs = t.files()
         assert all("o_orderkey" in f.stats for f in fs)
+        # the zone maps are what the footer read shared with batch writes
+        # returns, and they bound the data
+        for f in fs:
+            fpath = os.path.join(t.path, f.path)
+            col = pq.read_table(fpath, columns=["o_orderkey"])["o_orderkey"]
+            st = f.stats["o_orderkey"]
+            assert st == footer_stats(fpath, ["o_orderkey"])[1]["o_orderkey"]
+            assert (st["min"], st["max"]) == (pc.min(col).as_py(), pc.max(col).as_py())
         # pruning works against a range no file can satisfy
         assert t.files(prune=("o_orderkey", 10**12, None)) == []

@@ -7,14 +7,17 @@ compaction and vacuum."""
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from etl_mssql_to_postgres_dailysync_spark.sources import txn_table
 from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import (
     ConcurrentWriteError,
     TxnTable,
     _version_path,
+    snapshot,
 )
 
 
@@ -25,6 +28,37 @@ def tdir(tmp_path):
 
 def _orders(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/orders.parquet")
+
+
+def _widening(spark, sf_dir, tdir, cols=("o_orderkey", "o_totalprice", "channel")):
+    """A table whose v0 holds 10 (o_orderkey, o_totalprice) rows, and a
+    5-row batch that adds ``channel``, its columns in ``cols`` order."""
+    t = TxnTable(spark, tdir)
+    t.append(_orders(spark, sf_dir).select("o_orderkey", "o_totalprice")
+             .orderBy("o_orderkey").limit(10))
+    widened = (
+        _orders(spark, sf_dir)
+        .select("o_orderkey", "o_totalprice")
+        .filter(F.col("o_orderkey") >= 1000)
+        .orderBy("o_orderkey")
+        .limit(5)
+        .withColumn("channel", F.lit("web"))
+        .select(*cols)
+    )
+    return t, widened
+
+
+def _spec_evolved(spark, sf_dir, tdir):
+    """300 orders plus ``status`` in three appends: v0 unpartitioned, v1
+    partitioned by ``status``, v2 inheriting that spec."""
+    t = TxnTable(spark, tdir)
+    orders = _orders(spark, sf_dir).limit(300).withColumn(
+        "status", F.col("o_orderstatus")
+    )
+    t.append(orders.filter(F.col("o_orderkey") % 3 == 0))
+    t.append(orders.filter(F.col("o_orderkey") % 3 == 1), partition_by=["status"])
+    t.append(orders.filter(F.col("o_orderkey") % 3 == 2))
+    return t
 
 
 class TestCommitProtocol:
@@ -69,7 +103,7 @@ class TestCommitProtocol:
         t2 = TxnTable(spark, tdir)
         snapshot_head = t2.version()
         t1.append(_orders(spark, sf_dir).limit(5))  # intervening commit
-        live, _ = t2._snapshot(snapshot_head)
+        live = snapshot(t2.path, snapshot_head).live
         actions = [{"remove": {"path": p}} for p in live]
         with pytest.raises(ConcurrentWriteError):
             t2._commit("overwrite", actions, snapshot_head + 1, None)
@@ -127,8 +161,9 @@ class TestPruningCompactVacuum:
         for f in t.files():
             assert os.path.exists(os.path.join(t.path, f.path))
 
-    def test_checkpoint_used_for_snapshot(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir, checkpoint_interval=3)
+    def test_checkpoint_used_for_snapshot(self, spark, sf_dir, tdir, monkeypatch):
+        monkeypatch.setattr(txn_table, "CHECKPOINT_INTERVAL", 3)
+        t = TxnTable(spark, tdir)
         for i in range(5):
             t.append(_orders(spark, sf_dir).limit(2))
         assert os.path.exists(_version_path(t.log, 3, checkpoint=True))
@@ -237,27 +272,51 @@ class TestFileGranularMerge:
         assert t.read().count() == base.count() + newrows.count()
 
 
-class TestSchemaEvolution:
-    def test_merge_schema_widens_and_backfills_null(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        base = _orders(spark, sf_dir).select("o_orderkey", "o_totalprice").limit(10)
-        t.append(base)
-        widened = (
-            _orders(spark, sf_dir)
-            .select("o_orderkey", "o_totalprice")
-            .filter(F.col("o_orderkey") >= 1000)
-            .limit(5)
-            .withColumn("channel", F.lit("web"))
-        )
-        with pytest.raises(ValueError, match="merge_schema"):
-            t.append(widened)
+class TestReadsRunNoJob:
+    """Reads take their schema from the log: building one runs no Spark job
+    (no footer schema inference), at the head or at any version."""
+
+    @staticmethod
+    def _assert_reads_run_no_job(spark, t):
+        sc = spark.sparkContext
+        for v in [None, *range(t.version() + 1)]:
+            group = f"read-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                t.read(version=v)
+            finally:
+                sc.setJobGroup(None, None)
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], f"version={v}"
+
+    def test_schema_widened_table(self, spark, sf_dir, tdir):
+        t, widened = _widening(spark, sf_dir, tdir)
         t.append(widened, merge_schema=True)
-        out = t.read()
-        assert out.columns == ["o_orderkey", "o_totalprice", "channel"]
-        assert out.count() == 15
-        assert out.filter(F.col("channel").isNull()).count() == 10
-        # time travel sees the OLD schema
-        assert t.read(version=0).columns == ["o_orderkey", "o_totalprice"]
+        self._assert_reads_run_no_job(spark, t)
+
+    def test_partition_spec_evolved_table(self, spark, sf_dir, tdir):
+        self._assert_reads_run_no_job(spark, _spec_evolved(spark, sf_dir, tdir))
+
+
+class TestSchemaEvolution:
+    def test_merge_schema_widens_and_backfills_null(self, spark, sf_dir, tmp_path):
+        # the widening batch may list the old columns in another physical
+        # order: reads return the logged order, NULL for pre-evolution rows
+        for cols in [("o_orderkey", "o_totalprice", "channel"),
+                     ("channel", "o_totalprice", "o_orderkey")]:
+            t, widened = _widening(spark, sf_dir, str(tmp_path / "_".join(cols)), cols)
+            with pytest.raises(ValueError, match="merge_schema"):
+                t.append(widened)
+            t.append(widened, merge_schema=True)
+            out = t.read()
+            assert out.columns == list(cols)
+            assert out.count() == 15
+            assert out.filter(F.col("channel").isNull()).count() == 10
+            want = {(k, p, None) for k, p in t.read(version=0).collect()}
+            want |= {(r["o_orderkey"], r["o_totalprice"], "web") for r in widened.collect()}
+            assert {tuple(r) for r in out.select(
+                "o_orderkey", "o_totalprice", "channel").collect()} == want
+            # time travel sees the OLD schema
+            assert t.read(version=0).columns == ["o_orderkey", "o_totalprice"]
 
     def test_column_removal_always_rejected(self, spark, sf_dir, tdir):
         t = TxnTable(spark, tdir)
@@ -303,17 +362,8 @@ class TestPartitionLayout:
         """Iceberg-style spec evolution: commit 0 unpartitioned, commit 1
         partitioned; old files keep their layout, reads union both, and the
         implicit spec applies to later appends that don't re-declare it."""
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(300).withColumn(
-            "status", F.col("o_orderstatus")
-        )
-        a = orders.filter(F.col("o_orderkey") % 3 == 0)
-        b = orders.filter(F.col("o_orderkey") % 3 == 1)
-        c = orders.filter(F.col("o_orderkey") % 3 == 2)
-        t.append(a)                                 # unpartitioned
-        assert t.partition_spec() == []
-        t.append(b, partition_by=["status"])        # evolve
-        t.append(c)                                 # inherits evolved spec
+        t = _spec_evolved(spark, sf_dir, tdir)
+        assert t.partition_spec(version=0) == []
         assert t.partition_spec() == ["status"]
         spec_of = {f.path: f.partition_values for f in t.files()}
         assert any(v is None for v in spec_of.values())        # old layout
@@ -444,10 +494,11 @@ class TestMetadataViews:
         assert len(t.files()) == 1
         assert t.read().count() == 800
 
-    def test_specs_survive_log_checkpoint(self, spark, sf_dir, tdir):
+    def test_specs_survive_log_checkpoint(self, spark, sf_dir, tdir, monkeypatch):
         """Partition/bucket specs live in commit props; snapshot replay that
         starts from a checkpoint must still see them."""
-        t = TxnTable(spark, tdir, checkpoint_interval=5)
+        monkeypatch.setattr(txn_table, "CHECKPOINT_INTERVAL", 5)
+        t = TxnTable(spark, tdir)
         orders = _orders(spark, sf_dir).limit(40).withColumn(
             "status", F.col("o_orderstatus")
         )
