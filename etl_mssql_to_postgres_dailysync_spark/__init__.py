@@ -7,8 +7,9 @@ Layout:
     schemas     StructType registry for reference + testdata tables
     operators/  merge family (upsert/MERGE/conditional), coercion, filters,
                 projections, validation
-    sources/    readers (csv/parquet/jdbc), writers (upsert sink, snapshot
-                replace), synthetic data generator
+    sources/    readers (csv/jdbc), TxnTable (the ACID table format for every
+                file the engine owns), writers (CSV and JDBC sinks) with
+                per-engine upsert dialects, synthetic data generator
     functions/  text analysis, dedup (exact/minhash/simhash/ngram), vector
                 similarity, multimodal column plumbing
     plans/      composed pipelines (daily_sync, backfill)

@@ -71,7 +71,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark only reads
-        # nanos as long — sources.readers.read_parquet converts back to micros
+        # nanos as long — plans.driver_queries._t converts back to micros
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

@@ -1,8 +1,8 @@
-"""Source readers — S1-S3, S10 (SURVEY.md §2.1).
+"""Source readers — S1-S3 (SURVEY.md §2.1).
 
 The reference's extract is a parameterized SQL executed inside MSSQL with a
 5000-row chunked iterator (dags/mssql_to_postgresql_orders_daily.py:199-208).
-Spark-native form: a JDBC (or parquet) read with the predicate attached so
+Spark-native form: a JDBC read with the predicate attached so
 Catalyst pushes it into the source, and partitioned-read options replacing
 hand chunking. No driver-side row loops anywhere.
 """
@@ -10,7 +10,6 @@ hand chunking. No driver-side row loops anywhere.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -37,11 +36,6 @@ def read_csv(
     else:
         reader = reader.option("inferSchema", "false")  # all strings -> coercion layer
     return reader.csv(path)
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan; filters/projections compose into pushdown + pruning."""
-    return spark.read.parquet(path)
 
 
 def read_jdbc(
@@ -85,8 +79,3 @@ def read_jdbc(
         reader = reader.option(k, v)
     return reader.load()
 
-
-def scalar_count(df: DataFrame) -> int:
-    """S10 — scalar-query source (validation count,
-    dags/…_orders_daily.py:561-566)."""
-    return df.count()

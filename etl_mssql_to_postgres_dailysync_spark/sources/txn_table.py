@@ -469,7 +469,8 @@ class TxnTable:
               prune_col: str | None = None, **merge_kwargs) -> int:
         """Copy-on-write MERGE: run the relational merge (operators/merge.py
         — the engine's S6-S8 semantics) against the target snapshot and
-        publish atomically.
+        publish atomically.  A table with no commits is an empty target of
+        the source's schema, so the first merge dedupes like every later one.
 
         With ``prune_col`` (a stats column), the rewrite is FILE-GRANULAR:
         the batch's [min, max] on that column (one tiny aggregation) selects
@@ -513,7 +514,8 @@ class TxnTable:
                 prune_col, _json_safe(lohi["lo"]), _json_safe(lohi["hi"])))]
         else:
             touched = list(live)
-        target = self._read_add_files([live[p] for p in touched], snap.schema)
+        target = self._read_add_files([live[p] for p in touched],
+                                      snap.schema or source.schema.jsonValue())
         merged = rel_merge(target, source, keys, **merge_kwargs).df
         return self._rewrite("merge", snap, touched, merged,
                              {"keys": list(keys), "files_rewritten": len(touched),

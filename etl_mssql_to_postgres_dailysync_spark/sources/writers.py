@@ -1,14 +1,16 @@
 """Sinks — S4-S9 (SURVEY.md §2.1).
 
-Two worlds:
-  * files/tables we own (parquet): merge-as-rewrite via operators.merge, and
-    date-partitioned layout so a daily merge touches only affected partitions
-    (the scale path — partition pruning on ``order_date``).
-  * real JDBC targets: Spark has no native upsert, so ``jdbc_upsert_write``
-    replays the reference's batched ``INSERT ... ON CONFLICT`` per partition
-    (dags/mssql_to_postgresql_orders_daily.py:296-343) — idempotent, so
-    task retries are safe. Gated: needs a live DB + driver jar, neither in
-    this container.
+Files the engine owns are TxnTables (sources/txn_table.py): partitioned
+appends, partition-scoped merges and snapshot replaces are its ``append``,
+``merge(prune_col=)`` and ``overwrite``, each one atomic commit. This module
+holds the sinks for everything else:
+  * CSV in the reference's interchange format (``write_csv``);
+  * real JDBC targets: ``jdbc_append`` for the staging load, and
+    ``jdbc_upsert_write``, which replays the reference's batched upsert per
+    partition (dags/mssql_to_postgresql_orders_daily.py:296-343) in the
+    target's native form, rendered by a ``Dialect`` (sources/dialects.py) —
+    idempotent, so task retries are safe. Gated: needs a live DB + driver
+    jar, neither in this container.
 """
 
 from __future__ import annotations
@@ -16,6 +18,8 @@ from __future__ import annotations
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
+
+from etl_mssql_to_postgres_dailysync_spark.sources.dialects import Dialect, get_dialect
 
 
 def write_csv(df: DataFrame, path: str, *, timestamp_format: str = "yyyy-MM-dd HH:mm:ss.SSSSSS") -> None:
@@ -25,66 +29,6 @@ def write_csv(df: DataFrame, path: str, *, timestamp_format: str = "yyyy-MM-dd H
     df.write.mode("overwrite").option("header", True).option(
         "timestampFormat", timestamp_format
     ).option("timestampNTZFormat", timestamp_format).csv(path)
-
-
-def write_parquet_partitioned(
-    df: DataFrame, path: str, partition_cols: Sequence[str] = (), mode: str = "overwrite"
-) -> None:
-    """Date-partitioned parquet: the engine-of-record layout. Daily syncs
-    rewrite only the partitions present in the batch (dynamic overwrite)."""
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols).option(
-            "partitionOverwriteMode", "dynamic"
-        )
-    writer.parquet(path)
-
-
-def merge_into_partitioned_parquet(
-    spark,
-    path: str,
-    batch: DataFrame,
-    keys: Sequence[str],
-    partition_col: str,
-    **merge_kwargs,
-) -> list:
-    """The 100 TB upsert: merge ``batch`` into a date-partitioned parquet
-    target, touching ONLY the partitions present in the batch.
-
-    1. enumerate the batch's partition values (tiny: a daily delta spans a
-       handful of dates);
-    2. read just those partitions of the target (partition pruning — the
-       other 99.9% of the table is never opened);
-    3. run the relational merge on that slice;
-    4. rewrite with dynamic partition overwrite, which replaces exactly the
-       affected directories and leaves every other partition's files intact.
-
-    The merged slice is materialized (localCheckpoint) before the write
-    because the write target is also the read source; a transactional table
-    format (Delta/Iceberg) replaces this with a real commit at production
-    scale. Returns the list of partition values rewritten.
-    """
-    from pyspark.sql import functions as F
-
-    from etl_mssql_to_postgres_dailysync_spark.operators.merge import merge as merge_op
-
-    parts = [r[0] for r in batch.select(partition_col).distinct().collect()]
-    target_slice = spark.read.parquet(path).filter(F.col(partition_col).isin(parts))
-    merged = merge_op(target_slice, batch, keys, **merge_kwargs).df
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .partitionBy(partition_col)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
-    return parts
-
-
-def snapshot_overwrite(df: DataFrame, path: str) -> None:
-    """S9 — TRUNCATE + full reload (dags/…_orders_daily.py:492-503) as an
-    atomic overwrite."""
-    df.write.mode("overwrite").parquet(path)
 
 
 def jdbc_append(
@@ -108,29 +52,6 @@ def jdbc_append(
         writer.mode("append").save()
 
 
-def make_on_conflict_sql(
-    table: str, columns: Sequence[str], keys: Sequence[str],
-    exclude_update_cols: Sequence[str] = (), matched_condition_sql: str | None = None,
-    placeholder: str = "%s",
-) -> str:
-    """Build the reference's dynamic upsert statement
-    (dags/…_orders_daily.py:296-308; conditional variant from the sync pyc).
-    Kept as a pure function so it is unit-testable without a database.
-    ``placeholder`` adapts to the driver's paramstyle ('%s' psycopg,
-    '?' pyodbc/sqlite)."""
-    collist = ", ".join(columns)
-    placeholders = ", ".join([placeholder] * len(columns))
-    update_cols = [c for c in columns if c not in keys and c not in exclude_update_cols]
-    sets = ", ".join(f"{c} = EXCLUDED.{c}" for c in update_cols)
-    sql = (
-        f"INSERT INTO {table} ({collist}) VALUES ({placeholders}) "
-        f"ON CONFLICT ({', '.join(keys)}) DO UPDATE SET {sets}"
-    )
-    if matched_condition_sql:
-        sql += f" WHERE {matched_condition_sql}"
-    return sql
-
-
 def jdbc_upsert_write(
     df: DataFrame,
     connect: Callable[[], "object"],
@@ -140,8 +61,7 @@ def jdbc_upsert_write(
     page_size: int = 100,
     exclude_update_cols: Sequence[str] = (),
     matched_condition_sql: str | None = None,
-    placeholder: str = "%s",
-    dialect=None,
+    dialect: Dialect | str = "postgres",
 ) -> None:
     """S6/S7 — distributed ON CONFLICT upsert for real JDBC targets: each
     Spark partition opens its own connection (via the picklable ``connect``
@@ -152,26 +72,14 @@ def jdbc_upsert_write(
 
     ``dialect`` (sources/dialects.py, a Dialect or its name) renders the
     upsert in the target engine's native form — Postgres/SQLite ON CONFLICT,
-    MSSQL MERGE, MySQL ON DUPLICATE KEY; without it the legacy
-    placeholder-parameterized ON CONFLICT builder is used."""
-    columns = df.columns
-    if dialect is not None:
-        from etl_mssql_to_postgres_dailysync_spark.sources.dialects import get_dialect
-
-        if isinstance(dialect, str):
-            dialect = get_dialect(dialect)
-        sql = dialect.upsert_sql(
-            table, columns, keys,
-            exclude_update_cols=exclude_update_cols,
-            matched_condition_sql=matched_condition_sql,
-        )
-    else:
-        sql = make_on_conflict_sql(
-            table, columns, keys,
-            exclude_update_cols=exclude_update_cols,
-            matched_condition_sql=matched_condition_sql,
-            placeholder=placeholder,
-        )
+    MSSQL MERGE, MySQL ON DUPLICATE KEY."""
+    if isinstance(dialect, str):
+        dialect = get_dialect(dialect)
+    sql = dialect.upsert_sql(
+        table, df.columns, keys,
+        exclude_update_cols=exclude_update_cols,
+        matched_condition_sql=matched_condition_sql,
+    )
 
     def load_partition(rows) -> None:
         conn = connect()

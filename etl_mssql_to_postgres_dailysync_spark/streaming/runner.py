@@ -5,8 +5,10 @@ disguise: daily event-time micro-batches, catchup replay, NULL-event-time
 quarantine as a side output, idempotent per-partition upsert. Mapped here:
 
   - daily micro-batch -> ``trigger(availableNow=True)`` replay
-  - per-batch upsert  -> ``foreachBatch`` + the same merge operator
-  - quarantine        -> a second filter branch of the same micro-batch
+  - per-batch upsert  -> ``foreachBatch`` + ``TxnTable.merge`` (one atomic
+                         commit per micro-batch)
+  - quarantine        -> the batch path's complete/incomplete split of the
+                         same micro-batch, merged by key into its own table
   - tumbling/window aggregation + watermark for late data
   - sessionization via ``session_window``
 """
@@ -19,44 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_mssql_to_postgres_dailysync_spark.operators.merge import merge as merge_op, dedupe_last_wins
+from etl_mssql_to_postgres_dailysync_spark.operators.filters import split_complete_incomplete
+from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+from etl_mssql_to_postgres_dailysync_spark.sources.writers import jdbc_upsert_write
 
 
 def read_stream_parquet(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """File-source stream (schema required for streaming reads)."""
     return spark.readStream.format("parquet").schema(schema).load(path)
-
-
-def merge_sink(
-    target_path: str,
-    keys: Sequence[str],
-    *,
-    quarantine_ts_col: str | None = None,
-    quarantine_path: str | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` function applying the engine merge to a parquet
-    target — exactly-once per partition in effect because the merge is
-    idempotent (re-running a micro-batch converges to the same state,
-    the reference's re-run safety property, dags/…_orders_daily.py:28-29)."""
-
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        complete = batch
-        if quarantine_ts_col is not None:
-            incomplete = batch.filter(F.col(quarantine_ts_col).isNull())
-            complete = batch.filter(F.col(quarantine_ts_col).isNotNull())
-            if quarantine_path is not None:
-                incomplete.write.mode("append").parquet(quarantine_path)
-        try:
-            target = spark.read.parquet(target_path)
-            merged = merge_op(target, complete, keys).df
-        except Exception:  # first batch: no target yet
-            merged = dedupe_last_wins(complete, keys)
-        # rewrite target atomically (parquet has no txn; staging-dir rename
-        # or a table format (Delta/Iceberg) supplies atomicity in production)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
-
-    return apply_batch
 
 
 def run_available_now(
@@ -134,8 +106,6 @@ def jdbc_upsert_sink(
     converge — effective exactly-once on the JDBC target, which is the
     reference's daily-rerun guarantee in streaming form.
     ``single_writer`` serializes partitions for targets like SQLite."""
-    from etl_mssql_to_postgres_dailysync_spark.sources.writers import jdbc_upsert_write
-
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
         if single_writer:
             batch = batch.coalesce(1)
@@ -170,20 +140,35 @@ def stream_stream_interval_join(
     return l.alias("l").join(r.alias("r"), cond, "inner")
 
 
-def txn_merge_sink(table_path: str, keys: Sequence[str], **merge_kwargs):
+def txn_merge_sink(
+    table_path: str,
+    keys: Sequence[str],
+    *,
+    quarantine_ts_col: str | None = None,
+    quarantine_path: str | None = None,
+    **merge_kwargs,
+) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` sink merging each micro-batch into a TxnTable
     (sources/txn_table.py): streaming ingestion with ACID visibility — every
     micro-batch is one atomic commit, readers only ever see complete
     batches, and a replayed batch re-merges idempotently (the checkpoint +
     idempotent-commit pair is the streaming exactly-once contract in
-    lake-table form)."""
-    from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+    lake-table form; the reference's re-run safety property,
+    dags/…_orders_daily.py:28-29).
+
+    With ``quarantine_ts_col``, rows whose timestamp is NULL are split off
+    (``filters.split_complete_incomplete``, as in the batch sync) and, given
+    ``quarantine_path``, merged by ``keys`` into a quarantine TxnTable, so a
+    replay converges there too. A batch the merge rejects (e.g. a column
+    the table lacks) raises and commits nothing."""
 
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        t = TxnTable(batch.sparkSession, table_path)
-        if t.version() < 0:
-            t.append(batch, meta={"epoch": epoch_id})
-        else:
-            t.merge(batch, keys, **merge_kwargs)
+        spark = batch.sparkSession
+        complete = batch
+        if quarantine_ts_col is not None:
+            complete, incomplete = split_complete_incomplete(batch, quarantine_ts_col)
+        TxnTable(spark, table_path).merge(complete, keys, **merge_kwargs)
+        if quarantine_ts_col is not None and quarantine_path is not None:
+            TxnTable(spark, quarantine_path).merge(incomplete, keys)
 
     return apply_batch

@@ -13,10 +13,7 @@ import tempfile
 
 import pytest
 
-from etl_mssql_to_postgres_dailysync_spark.sources.writers import (
-    jdbc_upsert_write,
-    make_on_conflict_sql,
-)
+from etl_mssql_to_postgres_dailysync_spark.sources.writers import jdbc_upsert_write
 
 DB_PATH = os.path.join(tempfile.gettempdir(), "spark_graft_upsert_test.db")
 
@@ -47,25 +44,34 @@ def db():
 
 
 def test_make_on_conflict_sql_shapes():
-    sql = make_on_conflict_sql("t", ["k", "v", "ver"], ["k"], placeholder="?")
+    """The ON CONFLICT SQL that ``jdbc_upsert_write`` renders through its
+    dialect: plain, then with an exclude mask and a guard."""
+    from etl_mssql_to_postgres_dailysync_spark.sources.dialects import get_dialect
+
+    sql = get_dialect("sqlite").upsert_sql("t", ["k", "v", "ver"], ["k"])
     assert sql == (
-        "INSERT INTO t (k, v, ver) VALUES (?, ?, ?) "
-        "ON CONFLICT (k) DO UPDATE SET v = EXCLUDED.v, ver = EXCLUDED.ver"
+        'INSERT INTO t ("k", "v", "ver") VALUES (?, ?, ?) '
+        'ON CONFLICT ("k") DO UPDATE SET "v" = EXCLUDED."v", "ver" = EXCLUDED."ver"'
     )
-    guarded = make_on_conflict_sql(
+    # the exclude mask drops a column from the SET list; the guard lands as
+    # the trailing WHERE
+    guarded = get_dialect("postgres").upsert_sql(
         "t", ["k", "v", "ver"], ["k"],
         exclude_update_cols=["ver"],
-        matched_condition_sql="EXCLUDED.ver > t.ver",
+        matched_condition_sql='EXCLUDED."ver" > t."ver"',
     )
-    assert "ver = EXCLUDED.ver" not in guarded
-    assert guarded.endswith("WHERE EXCLUDED.ver > t.ver")
+    assert guarded == (
+        'INSERT INTO t ("k", "v", "ver") VALUES (%s, %s, %s) '
+        'ON CONFLICT ("k") DO UPDATE SET "v" = EXCLUDED."v" '
+        'WHERE EXCLUDED."ver" > t."ver"'
+    )
 
 
 def test_upsert_insert_then_update(spark, db):
     df1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], ["k", "v", "ver"]).coalesce(1)
-    jdbc_upsert_write(df1, _connect_factory(), "t", ["k"], placeholder="?")
+    jdbc_upsert_write(df1, _connect_factory(), "t", ["k"], dialect="sqlite")
     df2 = spark.createDataFrame([(2, "B", 2), (3, "c", 1)], ["k", "v", "ver"]).coalesce(1)
-    jdbc_upsert_write(df2, _connect_factory(), "t", ["k"], placeholder="?")
+    jdbc_upsert_write(df2, _connect_factory(), "t", ["k"], dialect="sqlite")
 
     con = sqlite3.connect(DB_PATH)
     rows = dict((k, (v, ver)) for k, v, ver in con.execute("SELECT k, v, ver FROM t"))
@@ -75,8 +81,8 @@ def test_upsert_insert_then_update(spark, db):
 
 def test_upsert_is_idempotent(spark, db):
     df = spark.createDataFrame([(1, "x", 1), (2, "y", 1)], ["k", "v", "ver"]).coalesce(1)
-    jdbc_upsert_write(df, _connect_factory(), "t", ["k"], placeholder="?")
-    jdbc_upsert_write(df, _connect_factory(), "t", ["k"], placeholder="?")  # replay = same state
+    jdbc_upsert_write(df, _connect_factory(), "t", ["k"], dialect="sqlite")
+    jdbc_upsert_write(df, _connect_factory(), "t", ["k"], dialect="sqlite")  # replay = same state
     con = sqlite3.connect(DB_PATH)
     assert con.execute("SELECT count(*) FROM t").fetchone()[0] == 2
     con.close()

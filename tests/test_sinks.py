@@ -1,109 +1,111 @@
-"""Sink tests: date-partitioned parquet layout (the engine-of-record), with
-partition-pruning verification — the storage half of the 100 TB design:
-a daily merge rewrites ONE partition, and a daily read scans ONE partition.
+"""Sink tests: the date-partitioned layout of an owned table (a TxnTable),
+with partition-pruning verification — the storage half of the 100 TB
+design: a daily merge rewrites ONE partition, and a daily read scans ONE
+partition. Every write here is a TxnTable commit, so no write reads the
+path it replaces.
 """
-
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_mssql_to_postgres_dailysync_spark.sources.fake_data import fake_orders
-from etl_mssql_to_postgres_dailysync_spark.sources.writers import (
-    snapshot_overwrite,
-    write_parquet_partitioned,
-)
+from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
 
 
 @pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="spark_sink_test_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+def tdir(tmp_path):
+    return str(tmp_path / "t")
 
 
-def test_partitioned_write_prunes_on_read(spark, tmpdir):
-    src = fake_orders(spark, 1000).filter(F.col("OrderCreatedAt").isNotNull())
-    src = src.withColumn("order_date", F.to_date("OrderCreatedAt"))
-    write_parquet_partitioned(src, f"{tmpdir}/orders", ["order_date"])
-
-    back = spark.read.parquet(f"{tmpdir}/orders")
-    assert back.count() == src.count()
-
-    some_date = src.select("order_date").first()["order_date"]
-    q = back.filter(F.col("order_date") == F.lit(some_date))
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    # the date predicate lands in PartitionFilters -> only one directory read
-    assert "PartitionFilters: [" in plan
-    assert "order_date" in plan.split("PartitionFilters:")[1].split("]")[0], plan
-    assert q.count() == src.filter(F.col("order_date") == F.lit(some_date)).count()
+def _dated_orders(spark, n):
+    return (
+        fake_orders(spark, n)
+        .filter(F.col("OrderCreatedAt").isNotNull())
+        .withColumn("order_date", F.to_date("OrderCreatedAt"))
+    )
 
 
-def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tmpdir):
-    src = fake_orders(spark, 500).filter(F.col("OrderCreatedAt").isNotNull())
-    src = src.withColumn("order_date", F.to_date("OrderCreatedAt"))
-    write_parquet_partitioned(src, f"{tmpdir}/t", ["order_date"])
+def _busiest_day(src):
+    return (src.groupBy("order_date").count()
+            .orderBy(F.desc("count"), "order_date").first()["order_date"])
+
+
+def _files_of_other_days(t, day):
+    # hive partition values are logged as their path strings
+    return {f.path for f in t.files()
+            if f.partition_values["order_date"] != str(day)}
+
+
+def test_partitioned_write_prunes_on_read(spark, tdir):
+    src = _dated_orders(spark, 1000)
+    t = TxnTable(spark, tdir)
+    t.append(src, partition_by=["order_date"])
+    assert t.read().count() == src.count()
+
+    some_date = str(src.select("order_date").first()["order_date"])
+    day = ("order_date", some_date, some_date)
+    # the date predicate prunes by logged partition value -> one day's files
+    pruned = t.files(prune=day)
+    assert 0 < len(pruned) < len(t.files())
+    assert all(f.partition_values["order_date"] == some_date for f in pruned)
+    assert t.read(prune=day).count() == src.filter(
+        F.col("order_date") == F.lit(some_date)
+    ).count()
+
+
+def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tdir):
+    src = _dated_orders(spark, 500)
+    t = TxnTable(spark, tdir)
+    t.append(src, partition_by=["order_date"])
     total = src.count()
 
     # rewrite ONE day with modified amounts; all other partitions untouched
-    some_date = src.groupBy("order_date").count().orderBy(F.desc("count")).first()["order_date"]
-    one_day = src.filter(F.col("order_date") == F.lit(some_date)).withColumn(
+    some_date = _busiest_day(src)
+    orig_day = src.filter(F.col("order_date") == F.lit(some_date))
+    one_day = orig_day.withColumn(
         "Amount", (F.col("Amount") + 1).cast("decimal(18,4)")
     )
-    write_parquet_partitioned(one_day, f"{tmpdir}/t", ["order_date"], mode="overwrite")
+    others = _files_of_other_days(t, some_date)
+    t.merge(one_day, ["OrderID"], prune_col="order_date")
 
-    back = spark.read.parquet(f"{tmpdir}/t")
-    assert back.count() == total  # dynamic mode replaced only the day's partition
+    assert others and others <= {f.path for f in t.files()}
+    back = t.read()
+    assert back.count() == total  # only the day's partition was replaced
     changed = back.filter(F.col("order_date") == F.lit(some_date))
-    orig_day = src.filter(F.col("order_date") == F.lit(some_date))
     assert float(changed.agg(F.sum("Amount")).first()[0]) == pytest.approx(
         float(orig_day.agg(F.sum("Amount")).first()[0]) + orig_day.count()
     )
 
 
-def test_merge_into_partitioned_parquet_touches_only_batch_partitions(spark, tmpdir):
-    import glob
-    import os
-
-    from etl_mssql_to_postgres_dailysync_spark.sources.writers import (
-        merge_into_partitioned_parquet,
-    )
-
-    src = fake_orders(spark, 800).filter(F.col("OrderCreatedAt").isNotNull())
-    src = src.withColumn("order_date", F.to_date("OrderCreatedAt"))
-    write_parquet_partitioned(src, f"{tmpdir}/t", ["order_date"])
+def test_merge_into_partitioned_parquet_touches_only_batch_partitions(spark, tdir):
+    """A daily delta merged with ``prune_col`` on the partition column
+    rewrites only that day's files: every other partition's files stay live
+    by path, the day's rows all update and its inserts land."""
+    src = _dated_orders(spark, 800)
+    t = TxnTable(spark, tdir)
+    t.append(src, partition_by=["order_date"])
     total = src.count()
 
     # delta: updates + inserts confined to ONE day
-    some_date = src.groupBy("order_date").count().orderBy(F.desc("count")).first()["order_date"]
+    some_date = _busiest_day(src)
     day = src.filter(F.col("order_date") == F.lit(some_date))
     marked = day.withColumn("Product", F.lit("UPDATED"))
     inserts = marked.withColumn("OrderID", F.col("OrderID") + 1_000_000)
-    batch = marked.unionByName(inserts)
+    others = _files_of_other_days(t, some_date)
 
-    untouched = {
-        d: os.path.getmtime(d)
-        for d in glob.glob(f"{tmpdir}/t/order_date=*")
-        if d != f"{tmpdir}/t/order_date={some_date}"
-    }
-    parts = merge_into_partitioned_parquet(
-        spark, f"{tmpdir}/t", batch, ["OrderID"], "order_date"
-    )
-    assert parts == [some_date]
-
-    back = spark.read.parquet(f"{tmpdir}/t")
+    t.merge(marked.unionByName(inserts), ["OrderID"], prune_col="order_date")
+    assert others and others <= {f.path for f in t.files()}
+    assert t.history()[-1]["meta"]["files_kept"] == len(others)
+    back = t.read()
     assert back.count() == total + day.count()  # inserts landed
     changed = back.filter(F.col("order_date") == F.lit(some_date))
+    assert changed.count() == 2 * day.count()
     assert changed.filter(F.col("Product") != "UPDATED").count() == 0
-    # every other partition's files are byte-untouched
-    for d, mtime in untouched.items():
-        assert os.path.getmtime(d) == mtime, f"partition {d} was rewritten"
 
 
-def test_snapshot_overwrite_replaces_state(spark, tmpdir):
-    a = fake_orders(spark, 100)
-    b = fake_orders(spark, 50)
-    snapshot_overwrite(a, f"{tmpdir}/snap")
-    snapshot_overwrite(b, f"{tmpdir}/snap")
-    assert spark.read.parquet(f"{tmpdir}/snap").count() == 50
+def test_snapshot_overwrite_replaces_state(spark, tdir):
+    t = TxnTable(spark, tdir)
+    t.overwrite(fake_orders(spark, 100))
+    t.overwrite(fake_orders(spark, 50))
+    assert t.read().count() == 50
+    assert t.read(version=0).count() == 100

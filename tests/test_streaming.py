@@ -25,35 +25,67 @@ def tmpdir():
 
 
 def test_available_now_merge_sink_matches_batch(spark, tmpdir):
+    from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+
     src = fake_orders(spark, 300)
     src.write.parquet(f"{tmpdir}/in")
 
+    def sink():
+        return runner.txn_merge_sink(
+            f"{tmpdir}/target",
+            ["OrderID"],
+            quarantine_ts_col="OrderCreatedAt",
+            quarantine_path=f"{tmpdir}/quarantine",
+        )
+
     stream = runner.read_stream_parquet(spark, f"{tmpdir}/in", src.schema)
-    sink = runner.merge_sink(
+    runner.run_available_now(stream, sink(), f"{tmpdir}/ckpt")
+
+    target = TxnTable(spark, f"{tmpdir}/target")
+    quarantine = TxnTable(spark, f"{tmpdir}/quarantine")
+    complete = src.filter(F.col("OrderCreatedAt").isNotNull())
+    incomplete = src.filter(F.col("OrderCreatedAt").isNull())
+    # the streamed merge state == the batch split (completeness invariant)
+    assert target.read().count() == complete.count()
+    assert quarantine.read().count() == incomplete.count()
+    assert target.read().exceptAll(complete).count() == 0
+
+    # replay idempotency: running the same input again converges (upsert, not
+    # append) in the target AND the quarantine — the reference's re-run
+    # safety property.
+    stream2 = runner.read_stream_parquet(spark, f"{tmpdir}/in", src.schema)
+    runner.run_available_now(stream2, sink(), f"{tmpdir}/ckpt2")
+    assert target.read().count() == complete.count()
+    assert target.read().exceptAll(complete).count() == 0
+    assert quarantine.read().count() == incomplete.count()
+    assert quarantine.read().exceptAll(incomplete).count() == 0
+
+
+def test_txn_merge_sink_rejects_batch_with_unknown_column(spark, tmpdir):
+    """A micro-batch whose columns the table lacks fails the batch and
+    commits nothing: the table (and its quarantine) keep their version and
+    rows, so the stream stops instead of replacing the table with the
+    batch."""
+    from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+
+    src = fake_orders(spark, 100)
+    sink = runner.txn_merge_sink(
         f"{tmpdir}/target",
         ["OrderID"],
         quarantine_ts_col="OrderCreatedAt",
         quarantine_path=f"{tmpdir}/quarantine",
     )
-    runner.run_available_now(stream, sink, f"{tmpdir}/ckpt")
+    sink(src, 0)
+    target = TxnTable(spark, f"{tmpdir}/target")
+    quarantine = TxnTable(spark, f"{tmpdir}/quarantine")
+    versions = (target.version(), quarantine.version())
+    before = target.read().collect()
 
-    target = spark.read.parquet(f"{tmpdir}/target")
-    quarantine = spark.read.parquet(f"{tmpdir}/quarantine")
-    complete = src.filter(F.col("OrderCreatedAt").isNotNull())
-    incomplete = src.filter(F.col("OrderCreatedAt").isNull())
-    # the streamed merge state == the batch split (completeness invariant)
-    assert target.count() == complete.count()
-    assert quarantine.count() == incomplete.count()
-    assert target.exceptAll(complete).count() == 0
-
-    # replay idempotency: running the same input again converges (upsert, not
-    # append) — the reference's re-run safety property.
-    stream2 = runner.read_stream_parquet(spark, f"{tmpdir}/in", src.schema)
-    sink2 = runner.merge_sink(f"{tmpdir}/target", ["OrderID"], quarantine_ts_col="OrderCreatedAt")
-    runner.run_available_now(stream2, sink2, f"{tmpdir}/ckpt2")
-    target2 = spark.read.parquet(f"{tmpdir}/target")
-    assert target2.count() == complete.count()
-    assert target2.exceptAll(complete).count() == 0
+    wider = src.limit(1).withColumn("channel", F.lit("web"))
+    with pytest.raises(ValueError, match="column mismatch"):
+        sink(wider, 1)
+    assert (target.version(), quarantine.version()) == versions
+    assert sorted(target.read().collect()) == sorted(before)
 
 
 def test_windowed_counts_stream_matches_batch(spark, tmpdir):
@@ -122,7 +154,8 @@ def test_session_window_stream(spark, tmpdir):
 
 
 def test_dedupe_last_wins_streaming_batch_parity(spark):
-    # the merge sink's first-batch path dedupes exactly like merge would
+    # last-wins dedupe keeps the highest version per key, the rule the
+    # merge applies to every micro-batch, the first one included
     df = spark.createDataFrame(
         [(1, "a", 1), (1, "b", 2), (2, "c", 1)], ["k", "v", "ver"]
     )
@@ -224,21 +257,26 @@ def test_streaming_txn_table_sink(spark, tmpdir):
     from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
 
     src = fake_orders(spark, 200).filter(F.col("OrderCreatedAt").isNotNull())
+    # one key twice in the same micro-batch: the first batch dedupes like
+    # every later one
+    dup = src.orderBy("OrderID").limit(1).withColumn("Product", F.lit("dup"))
+    src = src.unionByName(dup)
     src.write.parquet(f"{tmpdir}/in")
     stream = runner.read_stream_parquet(spark, f"{tmpdir}/in", src.schema)
     runner.run_available_now(
         stream, runner.txn_merge_sink(f"{tmpdir}/tbl", ["OrderID"]), f"{tmpdir}/ckpt"
     )
     t = TxnTable(spark, f"{tmpdir}/tbl")
-    expected = dedupe_last_wins(src, ["OrderID"]).count()
-    assert t.read().count() == expected
+    expected = dedupe_last_wins(src, ["OrderID"])
+    assert t.read().count() == expected.count() == src.count() - 1
+    assert t.read().exceptAll(expected).count() == 0
     # replay the same data through a fresh checkpoint: converges, one more commit
     v_before = t.version()
     stream2 = runner.read_stream_parquet(spark, f"{tmpdir}/in", src.schema)
     runner.run_available_now(
         stream2, runner.txn_merge_sink(f"{tmpdir}/tbl", ["OrderID"]), f"{tmpdir}/ckpt2"
     )
-    assert t.read().count() == expected
+    assert t.read().count() == expected.count()
     assert t.version() > v_before  # atomic commits recorded, state unchanged
 
 
