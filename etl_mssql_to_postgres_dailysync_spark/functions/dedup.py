@@ -253,7 +253,6 @@ def lsh_band_rows(
     num_hashes: int = 16,
     bands: int = 4,
     k: int = 3,
-    use_arrow: bool = True,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(doc, band, band_hash) rows of the MinHash-LSH index: one signature per
@@ -266,11 +265,10 @@ def lsh_band_rows(
     the expression pipeline is streaming-safe)."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signature_arrow if use_arrow else minhash_signature
     sigs = df.select(
         F.col(id_col).alias("doc"),
         *[F.col(c) for c in extra_cols],
-        sig_fn(F.col(text_col), num_hashes, k).alias("sigs"),
+        minhash_signature_arrow(F.col(text_col), num_hashes, k).alias("sigs"),
     )
     band_structs = []
     for b in range(bands):
@@ -296,7 +294,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     k: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing any band of their MinHash signature.
 
@@ -306,7 +303,7 @@ def minhash_lsh_pairs(
     O(n^2). Output: (id_a, id_b) with id_a < id_b, distinct.
     """
     band_rows = lsh_band_rows(
-        df, text_col, id_col, num_hashes=num_hashes, bands=bands, k=k, use_arrow=use_arrow
+        df, text_col, id_col, num_hashes=num_hashes, bands=bands, k=k
     )
     # NOTE (r10, measured): do NOT localCheckpoint the band rows here. Both
     # self-join sides hash-partition the identical subtree by (band,
@@ -331,7 +328,6 @@ def minhash_estimate_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     k: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Tiered near-dup verification, middle tier: for each LSH candidate
     pair, estimate Jaccard as the fraction of agreeing MinHash signature
@@ -346,10 +342,9 @@ def minhash_estimate_pairs(
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signature_arrow if use_arrow else minhash_signature
     sigs = df.select(
         F.col(id_col).alias("doc"),
-        sig_fn(F.col(text_col), num_hashes, k).alias("sigs"),
+        minhash_signature_arrow(F.col(text_col), num_hashes, k).alias("sigs"),
     )
     band_structs = []
     for b in range(bands):
@@ -397,7 +392,6 @@ def tiered_dedup_pairs(
     k: int = 3,
     est_threshold: float = 0.25,
     jaccard_threshold: float = 0.5,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The full tiered near-dup pipeline as ONE declarative plan:
 
@@ -415,12 +409,11 @@ def tiered_dedup_pairs(
     """
     est = minhash_estimate_pairs(
         df, text_col, id_col,
-        num_hashes=num_hashes, bands=bands, k=k, use_arrow=use_arrow,
+        num_hashes=num_hashes, bands=bands, k=k,
     )
     surv = est.filter(F.col("est_ppm") >= int(est_threshold * 1_000_000))
-    sh_fn = shingle_hashes_arrow if use_arrow else shingle_hashes
     sh = df.select(
-        F.col(id_col).alias("doc"), sh_fn(F.col(text_col), k).alias("shs")
+        F.col(id_col).alias("doc"), shingle_hashes_arrow(F.col(text_col), k).alias("shs")
     )
     joined = (
         surv.join(sh.select(F.col("doc").alias("id_a"), F.col("shs").alias("sha")), ["id_a"])
@@ -443,7 +436,6 @@ def incremental_lsh_dedup(
     num_hashes: int = 16,
     bands: int = 4,
     k: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Dedup an incoming batch AGAINST an existing corpus (the daily-sync
     shape of near-dup removal): new documents that share any MinHash band
@@ -460,7 +452,7 @@ def incremental_lsh_dedup(
     sharing >= 1 band. Unflagged docs are absent (anti-join the result to
     keep the clean ones).
     """
-    kw = dict(num_hashes=num_hashes, bands=bands, k=k, use_arrow=use_arrow)
+    kw = dict(num_hashes=num_hashes, bands=bands, k=k)
     corpus_bands = lsh_band_rows(corpus, text_col, id_col, **kw).select(
         "band", "band_hash", F.col("doc").alias("corpus_doc")
     )
@@ -517,7 +509,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     block_col: str | None = None,
-    use_arrow: bool = True,
     max_posting: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate pairs.
@@ -543,11 +534,10 @@ def ngram_jaccard_pairs(
     only miss pairs whose overlap is mostly boilerplate, which is the point.
     Default None = exact (no cap).
     """
-    sh_fn = shingle_hashes_arrow if use_arrow else shingle_hashes
     base = df.select(
         F.col(id_col).alias("doc"),
         *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
-        sh_fn(F.col(text_col), k).alias("shingles"),
+        shingle_hashes_arrow(F.col(text_col), k).alias("shingles"),
     ).withColumn("n_sh", F.size("shingles"))
     ex = base.select("doc", "blk", "n_sh", F.explode("shingles").alias("sh"))
     postings = ex.groupBy("blk", "sh").agg(
@@ -598,7 +588,6 @@ def jaccard_prefix_filter_pairs(
     *,
     k: int = 3,
     threshold_milli: int = 500,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via PREFIX FILTERING (Bayardo et al. 2007
     "Scaling Up All Pairs Similarity Search", arXiv not required — WWW'07):
@@ -622,10 +611,9 @@ def jaccard_prefix_filter_pairs(
     Returns the same (id_a, id_b, jaccard, jaccard_ppm) surface as
     :func:`ngram_jaccard_pairs` and provably the same rows at the same
     threshold (asserted in tests/test_functions.py)."""
-    sh_fn = shingle_hashes_arrow if use_arrow else shingle_hashes
     base = df.select(
         F.col(id_col).alias("doc"),
-        sh_fn(F.col(text_col), k).alias("shingles"),
+        shingle_hashes_arrow(F.col(text_col), k).alias("shingles"),
     ).withColumn("n_sh", F.size("shingles"))
     # NOTE (r10, measured): no eager materialization of `base` — its four
     # readers either share exchanges at runtime or execute as parallel
@@ -696,7 +684,6 @@ def shingle_containment_pairs(
     k: int = 3,
     threshold: float = 0.5,
     block_col: str | None = None,
-    use_arrow: bool = True,
     max_posting: int | None = None,
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT |A∩B| / min(|A|,|B|) for candidate
@@ -709,11 +696,10 @@ def shingle_containment_pairs(
     sizes); emits both directional containments plus the symmetric
     min-denominator score that the threshold applies to.
     """
-    sh_fn = shingle_hashes_arrow if use_arrow else shingle_hashes
     base = df.select(
         F.col(id_col).alias("doc"),
         *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
-        sh_fn(F.col(text_col), k).alias("shingles"),
+        shingle_hashes_arrow(F.col(text_col), k).alias("shingles"),
     ).withColumn("n_sh", F.size("shingles"))
     ex = base.select("doc", "blk", "n_sh", F.explode("shingles").alias("sh"))
     postings = ex.groupBy("blk", "sh").agg(
@@ -807,7 +793,6 @@ def substring_span_stats(
     id_col: str,
     *,
     w: int = 8,
-    use_arrow: bool = True,
     max_occurrences: int | None = None,
 ) -> DataFrame:
     """Exact repeated-substring detection, the Spark shape of suffix-array
@@ -840,9 +825,8 @@ def substring_span_stats(
     """
     from pyspark.sql import Window as W
 
-    win_fn = window_hashes_arrow if use_arrow else window_hashes
     base = df.select(
-        F.col(id_col).alias("doc"), win_fn(F.col(text_col), w).alias("whs")
+        F.col(id_col).alias("doc"), window_hashes_arrow(F.col(text_col), w).alias("whs")
     )
     wins = base.select("doc", F.posexplode("whs").alias("pos", "wh"))
     dup = (
@@ -886,7 +870,6 @@ def substring_span_removal(
     id_col: str,
     *,
     w: int = 8,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The transform half of substring dedup: rebuild each document with its
     cross-document duplicated spans REMOVED (what a training-data pipeline
@@ -905,12 +888,11 @@ def substring_span_removal(
     """
     from pyspark.sql import Window as W
 
-    win_fn = window_hashes_arrow if use_arrow else window_hashes
     toks = tokens(normalize(F.col(text_col)))
     base = df.select(
         F.col(id_col).alias("doc"),
         toks.alias("tk"),
-        win_fn(F.col(text_col), w).alias("whs"),
+        window_hashes_arrow(F.col(text_col), w).alias("whs"),
     )
     wins = base.select("doc", F.posexplode("whs").alias("pos", "wh"))
     dup = (
@@ -953,15 +935,13 @@ def top_duplicated_spans(
     *,
     w: int = 8,
     top_n: int = 20,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Memorization audit: the corpus's most-duplicated w-token spans.
     Groups positional window hashes, keeps cross-document ones, ranks by
     (distinct docs, total occurrences) — a TakeOrdered top-N, never a global
     sort. Ties broken by window hash for determinism."""
-    win_fn = window_hashes_arrow if use_arrow else window_hashes
     wins = df.select(
-        F.col(id_col).alias("doc"), F.explode(win_fn(F.col(text_col), w)).alias("wh")
+        F.col(id_col).alias("doc"), F.explode(window_hashes_arrow(F.col(text_col), w)).alias("wh")
     )
     agg = (
         wins.groupBy("wh")

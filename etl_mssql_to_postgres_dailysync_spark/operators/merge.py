@@ -124,11 +124,9 @@ def merge(
     source: DataFrame,
     keys: Sequence[str],
     *,
-    update_cols: Sequence[str] | None = None,
     exclude_update_cols: Sequence[str] = (),
     matched_condition: MatchedCondition | None = None,
     source_order_col: str | None = None,
-    dedupe_source: bool = True,
     strategy: str = "full_outer",
     insert_only: bool = False,
 ) -> MergeResult:
@@ -136,7 +134,6 @@ def merge(
 
     Args:
         keys: equality conflict target (single or composite — J1/J2).
-        update_cols: columns updated on match (default: all non-key).
         exclude_update_cols: columns that keep the target value on match
             (first-write-wins mask — S8's ``OrderCreatedAt`` exclusion).
         matched_condition: extra guard on the update branch (S7's
@@ -152,13 +149,8 @@ def merge(
         missing = set(target.columns) - set(source.columns)
         extra = set(source.columns) - set(target.columns)
         raise ValueError(f"source/target column mismatch: missing={missing} extra={extra}")
-    if dedupe_source:
-        source = dedupe_last_wins(source, keys, source_order_col)
-
-    updatable = set(update_cols if update_cols is not None else non_keys)
-    updatable -= set(exclude_update_cols)
-    if insert_only:
-        updatable = set()
+    source = dedupe_last_wins(source, keys, source_order_col)
+    updatable = set() if insert_only else set(non_keys) - set(exclude_update_cols)
 
     t = target.alias("__t__")
     s = source.alias("__s__")

@@ -28,11 +28,14 @@ Iceberg — public protocol designs) do, in miniature:
     building a read runs no Spark job; columns a file predates read as
     NULL, and column order is the logged one.
   * **File-level stats pruning (zone maps)**: each `add` records per-file
-    min/max/null-count for the indexed columns, read from the written files'
-    parquet footers on the driver — zero Spark jobs.  `read(prune=("col",
-    lo, hi))` skips files whose range cannot overlap — the metadata-driven
-    analog of hive partition pruning, but it also works for value-clustered
-    columns (`cluster_by=` range-partitions the write so ranges stay tight).
+    min/max/null-count for every top-level integer, floating-point, date and
+    timestamp-without-time-zone column (`footer_stats`), read from the
+    written files' parquet footers on the driver — zero Spark jobs, and no
+    setting: every writer, batch or stream, indexes the same columns.
+    `read(prune=("col", lo, hi))` skips files whose range cannot overlap —
+    the metadata-driven analog of hive partition pruning, but it also works
+    for value-clustered columns (`cluster_by=` range-partitions the write so
+    ranges stay tight).
   * **Time travel**: `read(version=k)` replays the log only to k.
   * **Checkpoints**: every `CHECKPOINT_INTERVAL` commits the full live set
     is written to `<version>.checkpoint.json`, so snapshot construction is
@@ -152,25 +155,41 @@ def snapshot(table_path: str, version: int | None = None) -> Snapshot:
     return Snapshot(version, live, schema, props)
 
 
-def footer_stats(fpath: str, cols: Sequence[str]) -> tuple[int, dict]:
+def _zone_mapped(t) -> bool:
+    """Whether a column of arrow type ``t`` gets a zone map: integers,
+    floating-point numbers, dates and timestamps without time zone, whose
+    footer min/max keep their order through ``_json_safe`` and ``str_cmp``.
+    Decimals come back as ``Decimal`` and would compare as strings by letter
+    ("100.0000" < "99.5000"); a tz-aware timestamp's string carries an
+    offset that the batch bounds of ``merge(prune_col=)`` lack. Strings,
+    booleans, binaries and nested columns are not indexed."""
+    import pyarrow as pa
+
+    return (pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_date(t)
+            or (pa.types.is_timestamp(t) and t.tz is None))
+
+
+def footer_stats(fpath: str) -> tuple[int, dict]:
     """(rows, zone maps) of one parquet file, from its footer on the driver:
-    ``{col: {"min", "max", "nulls"}}`` for each of ``cols`` whose every row
-    group carries min/max statistics. Zero Spark jobs (Delta does the same
-    via write-task stats); on an object store this is one ranged GET of the
-    footer, still metadata-scale."""
+    ``{col: {"min", "max", "nulls"}}`` for each top-level column of a
+    zone-mapped type (``_zone_mapped``) whose every row group carries
+    min/max statistics. Zero Spark jobs (Delta does the same via write-task
+    stats); on an object store this is one ranged GET of the footer, still
+    metadata-scale."""
     import pyarrow.parquet as pq
 
     md = pq.read_metadata(fpath)
-    col_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    leaf = {md.schema.column(i).path: i for i in range(md.num_columns)}
     stats = {}
-    for c in cols:
-        if c not in col_idx:
+    for field in md.schema.to_arrow_schema():
+        if not _zone_mapped(field.type):
             continue
+        c = field.name
         lo = hi = None
         nulls = 0
         ok = True
         for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx[c]).statistics
+            st = md.row_group(rg).column(leaf[c]).statistics
             if st is None or not st.has_min_max:
                 ok = False
                 break
@@ -192,11 +211,10 @@ def _write_synced(path: str, doc: dict) -> None:
 
 
 class TxnTable:
-    def __init__(self, spark: SparkSession, path: str, stats_cols: Sequence[str] = ()):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = os.path.abspath(path)
         self.log = os.path.join(self.path, LOG_DIR)
-        self.stats_cols = list(stats_cols)
         os.makedirs(self.log, exist_ok=True)
 
     # ---------------------------------------------------------------- log --
@@ -324,12 +342,15 @@ class TxnTable:
     # -------------------------------------------------------------- write --
 
     def _write_files(self, df: DataFrame, cluster_by: Sequence[str] | None,
-                     zorder_by: Sequence[str] | None = None,
                      partition_by: Sequence[str] | None = None,
                      bucket_by: dict | None = None) -> list[dict]:
         """Write df as immutable parquet files under a fresh commit dir and
         return their add-actions with per-file stats (``footer_stats``).
 
+        ``cluster_by`` range-partitions the write so each file covers a
+        tight value range, which is what makes min/max pruning selective:
+        on one column directly, on two or more by their Z-order key
+        (``zorder_key``), which keeps every one of them tight at once.
         ``partition_by`` writes hive-layout identity partitions; each file's
         partition values are parsed from its path into the add-action, so
         reads/pruning never re-list or re-parse directories (the
@@ -340,24 +361,22 @@ class TxnTable:
         deterministic one-stage write."""
         commit_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
         out = df
-        if zorder_by:
-            n = max(df.rdd.getNumPartitions(), 2)
-            zk = zorder_key(df, list(zorder_by))
-            out = (
-                df.withColumn("__zkey__", zk)
-                .repartitionByRange(n, F.col("__zkey__"))
-                .sortWithinPartitions("__zkey__")
-                .drop("__zkey__")
-            )
-        elif bucket_by:
+        if bucket_by:
             out = df.repartition(int(bucket_by["n"]), F.col(bucket_by["col"]))
         elif cluster_by:
-            # range-partition so each file covers a tight value range: this
-            # is what makes min/max pruning selective. The partition count is
-            # pinned explicitly so AQE doesn't coalesce small test inputs
-            # into one file (at scale, pick ~table_bytes / 1 GB).
+            # The partition count is pinned explicitly so AQE doesn't
+            # coalesce small test inputs into one file (at scale, pick
+            # ~table_bytes / 1 GB).
             n = max(df.rdd.getNumPartitions(), 2)
-            out = out.repartitionByRange(n, *[F.col(c) for c in cluster_by])
+            if len(cluster_by) == 1:
+                out = df.repartitionByRange(n, F.col(cluster_by[0]))
+            else:
+                out = (
+                    df.withColumn("__zkey__", zorder_key(df, cluster_by))
+                    .repartitionByRange(n, F.col("__zkey__"))
+                    .sortWithinPartitions("__zkey__")
+                    .drop("__zkey__")
+                )
         writer = out.write.mode("error")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -372,7 +391,7 @@ class TxnTable:
         )
         actions = []
         for fpath in files:
-            rows, stats = footer_stats(fpath, self.stats_cols)
+            rows, stats = footer_stats(fpath)
             add = {
                 "path": os.path.relpath(fpath, self.path),
                 "rows": rows,
@@ -400,7 +419,6 @@ class TxnTable:
                  df: DataFrame, meta: dict | None = None, *, check: bool = True,
                  schema: dict | None = None,
                  cluster_by: Sequence[str] | None = None,
-                 zorder_by: Sequence[str] | None = None,
                  partition_by: Sequence[str] | None = None,
                  bucket_by: dict | None = None) -> int:
         """The copy-on-write commit every write shares: remove the ``removed``
@@ -421,15 +439,14 @@ class TxnTable:
         if check:
             self._enforce(spec.get("checks", {}), df)
         actions = [{"remove": _remove_action(snap.live[p])} for p in removed]
-        actions += self._write_files(df, cluster_by, zorder_by,
+        actions += self._write_files(df, cluster_by,
                                      partition_by=spec.get("partition_spec") or None,
                                      bucket_by=spec.get("bucket_spec"))
         return self._commit(op, actions, snap.version + 1,
                             schema or df.schema.jsonValue(), meta, props or None)
 
     def append(self, df: DataFrame, cluster_by: Sequence[str] | None = None,
-               meta: dict | None = None, zorder_by: Sequence[str] | None = None,
-               merge_schema: bool = False,
+               meta: dict | None = None, merge_schema: bool = False,
                partition_by: Sequence[str] | None = None,
                bucket_by: dict | None = None) -> int:
         """Append; ``partition_by``/``bucket_by`` evolve the layout as in
@@ -452,8 +469,7 @@ class TxnTable:
                     "pass merge_schema=True to evolve"
                 )
         return self._rewrite("append", snap, [], df, meta, cluster_by=cluster_by,
-                             zorder_by=zorder_by, partition_by=partition_by,
-                             bucket_by=bucket_by)
+                             partition_by=partition_by, bucket_by=bucket_by)
 
     def overwrite(self, df: DataFrame, cluster_by: Sequence[str] | None = None,
                   meta: dict | None = None,
@@ -472,14 +488,16 @@ class TxnTable:
         publish atomically.  A table with no commits is an empty target of
         the source's schema, so the first merge dedupes like every later one.
 
-        With ``prune_col`` (a stats column), the rewrite is FILE-GRANULAR:
-        the batch's [min, max] on that column (one tiny aggregation) selects
-        only the target files whose zone maps overlap; untouched files stay
-        in the snapshot as-is — the Delta/Iceberg merge-on-read-competitive
-        path.  A daily delta against a date-clustered 100 TB table rewrites
-        one day's files, not the table.  Rows outside the touched files are
-        untouched by construction: their key ranges cannot intersect the
-        batch.  Without ``prune_col``, the whole live set rewrites.
+        With ``prune_col`` (an integer, floating-point, date or
+        timestamp-without-time-zone column, the types every file has zone
+        maps for), the rewrite is FILE-GRANULAR: the batch's [min, max] on
+        that column (one tiny aggregation) selects only the target files
+        whose zone maps overlap; untouched files stay in the snapshot as-is
+        — the Delta/Iceberg merge-on-read-competitive path.  A daily delta
+        against a date-clustered 100 TB table rewrites one day's files, not
+        the table.  Rows outside the touched files are untouched by
+        construction: their key ranges cannot intersect the batch.  Without
+        ``prune_col``, the whole live set rewrites.
 
         On a bucketed table whose bucket column is one of ``keys``, pruning
         is automatic: the source's distinct bucket ids (pmod(murmur3, n) —
@@ -884,7 +902,8 @@ def zorder_key(df: DataFrame, cols: Sequence[str], bits: int = 16):
     ALL the z-ordered columns at once.  Linear cluster_by gives perfect
     pruning on one column and none on the others; Z-order trades a little
     of the first for usable pruning on each (the standard lakehouse
-    OPTIMIZE ZORDER BY design).  Returns (column_expr, stats_row)."""
+    OPTIMIZE ZORDER BY design).  Returns the key Column; computing the
+    scale runs one aggregation job."""
     aggs = []
     for c in cols:
         aggs += [F.min(F.col(c).cast("double")).alias(f"__lo_{c}"),

@@ -159,8 +159,11 @@ def txn_merge_sink(
     With ``quarantine_ts_col``, rows whose timestamp is NULL are split off
     (``filters.split_complete_incomplete``, as in the batch sync) and, given
     ``quarantine_path``, merged by ``keys`` into a quarantine TxnTable, so a
-    replay converges there too. A batch the merge rejects (e.g. a column
-    the table lacks) raises and commits nothing."""
+    replay converges there too. A quarantined key that the batch completes
+    leaves the quarantine, as it would from the reference's snapshot-replaced
+    ``incomplete_orders``; the quarantine commits nothing when neither
+    happens. A batch the merge rejects (e.g. a column the table lacks)
+    raises and commits nothing."""
 
     def apply_batch(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -169,6 +172,16 @@ def txn_merge_sink(
             complete, incomplete = split_complete_incomplete(batch, quarantine_ts_col)
         TxnTable(spark, table_path).merge(complete, keys, **merge_kwargs)
         if quarantine_ts_col is not None and quarantine_path is not None:
-            TxnTable(spark, quarantine_path).merge(incomplete, keys)
+            quarantine = TxnTable(spark, quarantine_path)
+            if quarantine.files():
+                # bounded by the quarantine, never the batch
+                done = (quarantine.read().select(*keys)
+                        .join(complete.select(*keys), list(keys), "left_semi")
+                        .distinct().collect())
+                if done:
+                    quarantine.delete(F.struct(*keys).isin(
+                        [F.struct(*[F.lit(r[k]).alias(k) for k in keys]) for r in done]))
+            if not incomplete.isEmpty():
+                quarantine.merge(incomplete, keys)
 
     return apply_batch

@@ -78,52 +78,3 @@ def track_user_state(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def track_user_state_tws(stream):
-    """The same per-key running aggregate as ``track_user_state``, on the
-    Spark 4 ``transformWithStateInPandas`` API (StatefulProcessor with typed
-    ValueState) — the successor to applyInPandasWithState: explicit state
-    variables, timers, and TTL live on the handle instead of one
-    GroupState blob. Kept alongside the legacy operator so either API
-    drives the engine's custom stateful path.
-
-    Environment note: the TWS state-server protocol needs google.protobuf
-    at runtime; where it's unavailable (this container) the operator raises
-    on start and tests importorskip — applyInPandasWithState
-    (track_user_state) is the dependency-free fallback."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "agg", "n_events long, latest_ts_micros long, last_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, latest, last = (0, 0, 0.0)
-            if self._state.exists():
-                n, latest, last = self._state.get()
-            for pdf in rows:
-                pdf = pdf.sort_values("ts_micros")
-                n += len(pdf)
-                latest = max(latest, int(pdf["ts_micros"].iloc[-1]))
-                last = float(pdf["value"].iloc[-1])
-            self._state.update((n, latest, last))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n],
-                 "latest_ts_micros": [latest], "last_value": [last]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningAgg(),
-        outputStructType="user_id long, n_events long, latest_ts_micros long, last_value double",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -81,12 +81,11 @@ class TxnTableStreamWriter(DataSourceStreamArrowWriter):
         for h in t.history():
             if h["op"] == "stream_append" and h["meta"].get("batchId") == batchId:
                 return  # replayed micro-batch: already committed, skip
-        # zone maps for the ``statsCols`` option, from the same footer read
-        # batch writes use: stream-landed files prune like batch ones
-        cols = [c.strip() for c in self.options.get("statscols", "").split(",") if c.strip()]
+        # zone maps from the same footer read batch writes use: stream-landed
+        # files prune like batch ones
         adds = [
             {"add": {"path": m.path, "rows": m.rows, "bytes": m.bytes,
-                     "stats": footer_stats(os.path.join(self.table_path, m.path), cols)[1]}}
+                     "stats": footer_stats(os.path.join(self.table_path, m.path))[1]}}
             for m in messages
             if m is not None and m.path is not None
         ]

@@ -132,3 +132,32 @@ def test_quality_score_no_int32_overflow_on_long_docs(spark, long_doc_dir, name)
     score_col = "mean_score_micro" if "mean_score_micro" in sdf else "score_floor"
     assert (sdf[score_col] >= 0).all()
     assert (sdf[score_col] <= 1_000_000).all()
+
+
+@pytest.fixture(scope="module")
+def null_price_dir(tmp_path_factory):
+    """200 distinct prices plus 10 NULL ones: the NULL rows sort into the
+    cumulative windows of hdr_quantile_sketch, first or last."""
+    d = tmp_path_factory.mktemp("null_prices")
+    prices = [round(i * 1.37, 2) for i in range(1, 201)] + [None] * 10
+    _write_parquet(
+        d / "orders.parquet",
+        pd.DataFrame({"o_totalprice": pd.array(prices, dtype="Float64")}),
+    )
+    return str(d)
+
+
+def test_hdr_quantile_sketch_null_prices_sort_last(spark, null_price_dir):
+    """The oracle orders NULL cents (and their NULL bucket) last; Spark's
+    default ASC puts them first, which shifts every rank by the NULL count."""
+    sdf = QUERIES["hdr_quantile_sketch"](spark, null_price_dir).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW orders AS SELECT * FROM '{null_price_dir}/orders.parquet'"
+    )
+    odf = con.execute(ORACLES["hdr_quantile_sketch"]).fetchdf()
+    problems = compare("hdr_quantile_sketch", sdf, odf)
+    assert not problems, problems
+    # the ranks of p50..p95 fall on priced rows, p99 on a NULL one
+    assert sdf.set_index("pct")["exact_cents"].isna().to_dict() == {
+        50: False, 90: False, 95: False, 99: True}

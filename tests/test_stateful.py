@@ -72,43 +72,3 @@ def test_stateful_tracker_accumulates_across_batches(spark, tmpdir):
     # state really spanned batches: one emission per user per batch it appeared in
     assert spark.table("user_state").count() > final.count()
 
-
-def test_transform_with_state_matches_batch(spark, tmpdir):
-    """Spark 4 transformWithStateInPandas: same contract as the legacy
-    operator — final state equals the batch aggregate. The API's state
-    server speaks protobuf; skip where google.protobuf isn't installed
-    (this container ships pyspark without it)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    _events(spark, 0, 300).coalesce(1).write.parquet(f"{tmpdir}/in/b1")
-    _events(spark, 300, 500).coalesce(1).write.parquet(f"{tmpdir}/in/b2")
-    schema = _events(spark, 0, 1).schema
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(f"{tmpdir}/in/*")
-    )
-    tracked = stateful.track_user_state_tws(stream)
-    q = (
-        tracked.writeStream.format("memory")
-        .queryName("user_state_tws")
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_tws")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = spark.sql(
-        """
-        SELECT user_id, n_events, latest_ts_micros, last_value FROM (
-            SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-            FROM user_state_tws
-        ) WHERE rn = 1
-        """
-    )
-    batch = _events(spark, 0, 500).groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.max("ts_micros").alias("latest_ts_micros"),
-        F.max_by("value", "ts_micros").alias("last_value"),
-    )
-    assert final.exceptAll(batch).count() == 0 and batch.exceptAll(final).count() == 0

@@ -88,6 +88,113 @@ def test_txn_merge_sink_rejects_batch_with_unknown_column(spark, tmpdir):
     assert sorted(target.read().collect()) == sorted(before)
 
 
+def _orders_rows(spark, rows):
+    """Orders batch of (OrderID, OrderCreatedAt) rows; the other columns are
+    fixed."""
+    import datetime
+    from decimal import Decimal
+
+    from etl_mssql_to_postgres_dailysync_spark.schemas import ORDERS_SCHEMA
+
+    added = datetime.datetime(2025, 1, 1)
+    return spark.createDataFrame(
+        [(k, 1000, added, ts, Decimal("10.0000"), "book", False) for k, ts in rows],
+        ORDERS_SCHEMA,
+    )
+
+
+def _quarantine_sink(tmpdir, **merge_kwargs):
+    return runner.txn_merge_sink(
+        f"{tmpdir}/target",
+        ["OrderID"],
+        quarantine_ts_col="OrderCreatedAt",
+        quarantine_path=f"{tmpdir}/quarantine",
+        **merge_kwargs,
+    )
+
+
+def test_txn_merge_sink_releases_completed_orders(spark, tmpdir):
+    """An order quarantined for its NULL timestamp leaves the quarantine
+    once a later batch completes it, and a replay of that batch changes
+    neither table."""
+    import datetime
+
+    from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+
+    ts = datetime.datetime(2025, 1, 2, 10, 0)
+    sink = _quarantine_sink(tmpdir)
+    sink(_orders_rows(spark, [(1, None), (2, ts)]), 0)
+    target = TxnTable(spark, f"{tmpdir}/target")
+    quarantine = TxnTable(spark, f"{tmpdir}/quarantine")
+    assert [r.OrderID for r in quarantine.read().collect()] == [1]
+
+    batch2 = _orders_rows(spark, [(1, ts)])
+    sink(batch2, 1)
+    def keys(t):
+        return sorted(r.OrderID for r in t.read().collect())
+
+    assert keys(target) == [1, 2]
+    assert keys(quarantine) == []
+
+    rows, q_version = sorted(target.read().collect()), quarantine.version()
+    sink(batch2, 1)
+    assert sorted(target.read().collect()) == rows
+    assert keys(quarantine) == []
+    assert quarantine.version() == q_version
+
+
+def test_txn_merge_sink_commits_no_empty_quarantine(spark, tmpdir):
+    """A batch with no NULL-timestamp row and no quarantined key leaves the
+    quarantine's version as it was."""
+    import datetime
+
+    from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+
+    sink = _quarantine_sink(tmpdir)
+    sink(fake_orders(spark, 300), 0)
+    quarantine = TxnTable(spark, f"{tmpdir}/quarantine")
+    version, n = quarantine.version(), quarantine.read().count()
+    assert n > 0
+
+    ts = datetime.datetime(2025, 1, 2, 10, 0)
+    sink(_orders_rows(spark, [(k, ts) for k in range(10_001, 10_006)]), 1)
+    assert quarantine.version() == version
+    assert quarantine.read().count() == n
+    assert TxnTable(spark, f"{tmpdir}/target").read().count() == (
+        fake_orders(spark, 300).filter(F.col("OrderCreatedAt").isNotNull()).count() + 5)
+
+
+def test_txn_merge_sink_prunes_other_days(spark, tmpdir):
+    """A sink clustered and pruned by the event timestamp rewrites only the
+    files whose zone maps overlap a one-day batch; the other days' files
+    stay live by path."""
+    from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+
+    sink = runner.txn_merge_sink(
+        f"{tmpdir}/target", ["OrderID"],
+        cluster_by=["OrderCreatedAt"], prune_col="OrderCreatedAt",
+    )
+    orders = fake_orders(spark, 400).filter(F.col("OrderCreatedAt").isNotNull())
+    sink(orders.repartition(8), 0)
+    target = TxnTable(spark, f"{tmpdir}/target")
+    before = target.files()
+    day = orders.agg(F.min(F.to_date("OrderCreatedAt"))).first()[0]
+    one_day = orders.filter(F.to_date("OrderCreatedAt") == day).withColumn(
+        "Product", F.lit("resynced"))
+    sink(one_day, 1)
+
+    day_start, day_end = str(day), f"{day} 23:59:59.999999"
+    others = {f.path for f in before
+              if f.stats["OrderCreatedAt"]["max"] < day_start
+              or f.stats["OrderCreatedAt"]["min"] > day_end}
+    assert others
+    assert others <= {f.path for f in target.files()}
+    assert target.history()[-1]["meta"]["files_kept"] >= len(others)
+    out = target.read()
+    assert out.count() == orders.count()
+    assert out.filter(F.col("Product") == "resynced").count() == one_day.count() > 0
+
+
 def test_windowed_counts_stream_matches_batch(spark, tmpdir):
     events = (
         spark.range(0, 500)

@@ -621,7 +621,6 @@ class TestSinkConcurrency:
         s = spark.readStream.schema(schema).parquet(src_dir)
         q = (
             s.writeStream.format("txntable").option("path", tbl)
-            .option("statsCols", "o_orderkey")
             .option("checkpointLocation", ck)
             .trigger(availableNow=True).start()
         )
@@ -635,7 +634,33 @@ class TestSinkConcurrency:
             fpath = os.path.join(t.path, f.path)
             col = pq.read_table(fpath, columns=["o_orderkey"])["o_orderkey"]
             st = f.stats["o_orderkey"]
-            assert st == footer_stats(fpath, ["o_orderkey"])[1]["o_orderkey"]
+            assert st == footer_stats(fpath)[1]["o_orderkey"]
             assert (st["min"], st["max"]) == (pc.min(col).as_py(), pc.max(col).as_py())
         # pruning works against a range no file can satisfy
         assert t.files(prune=("o_orderkey", 10**12, None)) == []
+
+    def test_stream_zone_maps_equal_footer_stats(self, spark, sf_dir, base):
+        """With no option, every stream-landed file logs the zone maps the
+        batch write path would: ``footer_stats`` of that file, for each
+        integer, floating-point and timestamp column."""
+        from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import footer_stats
+        from etl_mssql_to_postgres_dailysync_spark.streaming.txn_sink import (
+            TxnTableSinkDataSource,
+        )
+
+        spark.dataSource.register(TxnTableSinkDataSource)
+        src_dir, tbl, ck = f"{base}/in", f"{base}/tbl", f"{base}/ck"
+        _orders(spark, sf_dir).limit(500).write.mode("append").parquet(src_dir)
+        s = spark.readStream.schema(_orders(spark, sf_dir).schema).parquet(src_dir)
+        q = (
+            s.writeStream.format("txntable").option("path", tbl)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+        t = TxnTable(spark, tbl)
+        fs = t.files()
+        assert fs
+        for f in fs:
+            assert f.stats == footer_stats(os.path.join(t.path, f.path))[1]
+            assert set(f.stats) == {"o_orderkey", "o_totalprice", "o_orderdate"}

@@ -130,7 +130,7 @@ class TestMerge:
 
 class TestPruningCompactVacuum:
     def test_stats_pruning_skips_files(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir, stats_cols=["o_orderkey"])
+        t = TxnTable(spark, tdir)
         df = _orders(spark, sf_dir).repartition(8)
         t.append(df, cluster_by=["o_orderkey"])
         all_files = t.files()
@@ -199,9 +199,9 @@ class TestChanges:
 
 class TestZOrder:
     def test_zorder_prunes_on_both_dimensions(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir, stats_cols=["o_orderkey", "o_custkey"])
+        t = TxnTable(spark, tdir)
         df = _orders(spark, sf_dir).repartition(16)
-        t.append(df, zorder_by=["o_orderkey", "o_custkey"])
+        t.append(df, cluster_by=["o_orderkey", "o_custkey"])
         n_all = len(t.files())
         lo_k = df.agg(F.min("o_orderkey")).first()[0]
         lo_c = df.agg(F.min("o_custkey")).first()[0]
@@ -237,7 +237,7 @@ class TestZOrder:
 
 class TestFileGranularMerge:
     def test_merge_rewrites_only_overlapping_files(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir, stats_cols=["o_orderkey"])
+        t = TxnTable(spark, tdir)
         df = _orders(spark, sf_dir).repartition(8)
         t.append(df, cluster_by=["o_orderkey"])
         files_before = {f.path for f in t.files()}
@@ -262,7 +262,7 @@ class TestFileGranularMerge:
         ).count() == 0
 
     def test_pruned_merge_into_untouched_range_inserts(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir, stats_cols=["o_orderkey"])
+        t = TxnTable(spark, tdir)
         base = _orders(spark, sf_dir).filter(F.col("o_orderkey") < 500).repartition(4)
         t.append(base, cluster_by=["o_orderkey"])
         newrows = _orders(spark, sf_dir).filter(
@@ -270,6 +270,42 @@ class TestFileGranularMerge:
         )
         t.merge(newrows, ["o_orderkey"], prune_col="o_orderkey")
         assert t.read().count() == base.count() + newrows.count()
+
+    def test_zone_maps_need_no_setting(self, spark, sf_dir, tdir):
+        """Any handle indexes what it writes: a table appended through one
+        plain handle prunes a merge run through another."""
+        orders = _orders(spark, sf_dir).withColumn("order_date", F.to_date("o_orderdate"))
+        TxnTable(spark, tdir).append(orders.repartition(8), cluster_by=["order_date"])
+        t = TxnTable(spark, tdir)
+        n_files = len(t.files())
+        day = orders.agg(F.min("order_date")).first()[0]
+        batch = orders.filter(F.col("order_date") == day).withColumn(
+            "o_orderstatus", F.lit("U"))
+        t.merge(batch, ["o_orderkey"], prune_col="order_date")
+        meta = t.history()[-1]["meta"]
+        assert meta["files_kept"] > 0
+        assert meta["files_kept"] + meta["files_rewritten"] == n_files
+        out = t.read()
+        assert out.count() == orders.count()
+        assert out.filter(F.col("o_orderstatus") == "U").count() == batch.count()
+
+    def test_zone_maps_skip_unorderable_types(self, spark, tdir):
+        """Decimals, strings, booleans and arrays get no zone map, so a
+        prune on one of them can rule out no file."""
+        df = spark.range(0, 400, numPartitions=4).select(
+            F.col("id").alias("k"),
+            (F.col("id") / 4).cast("decimal(10,4)").alias("amount"),
+            F.col("id").cast("string").alias("label"),
+            (F.col("id") % 2 == 0).alias("flag"),
+            F.array(F.col("id")).alias("ids"),
+        )
+        t = TxnTable(spark, tdir)
+        t.append(df, cluster_by=["k"])
+        fs = t.files()
+        assert len(fs) > 1
+        assert all(set(f.stats) == {"k"} for f in fs)
+        assert len(t.files(prune=("amount", "0", "1"))) == len(fs)
+        assert len(t.files(prune=("k", 0, 1))) < len(fs)
 
 
 class TestReadsRunNoJob:
@@ -467,7 +503,7 @@ class TestBucketLayout:
 
 class TestMetadataViews:
     def test_files_df_and_history_df(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir, stats_cols=["o_orderkey"])
+        t = TxnTable(spark, tdir)
         orders = _orders(spark, sf_dir).limit(100)
         t.append(orders, bucket_by={"col": "o_orderkey", "n": 4})
         t.merge(orders.limit(5).withColumn("o_totalprice", F.lit(0.0)), ["o_orderkey"])
@@ -532,7 +568,7 @@ class TestTimestampTravel:
 
 class TestDelete:
     def test_delete_is_file_granular_and_time_travels(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir, stats_cols=["o_orderkey"])
+        t = TxnTable(spark, tdir)
         orders = _orders(spark, sf_dir).limit(1000)
         # cluster so the delete range concentrates in few files
         t.append(orders, cluster_by=["o_orderkey"])
