@@ -32,10 +32,13 @@ Iceberg — public protocol designs) do, in miniature:
     timestamp-without-time-zone column (`footer_stats`), read from the
     written files' parquet footers on the driver — zero Spark jobs, and no
     setting: every writer, batch or stream, indexes the same columns.
-    `read(prune=("col", lo, hi))` skips files whose range cannot overlap —
-    the metadata-driven analog of hive partition pruning, but it also works
-    for value-clustered columns (`cluster_by=` range-partitions the write so
-    ranges stay tight).
+    `read(prune=("col", lo, hi))` skips files whose range cannot overlap.
+  * **One file layout**: `cluster_by=` range-partitions a write on one
+    column, so each file's zone map on it stays tight and a prune on it
+    skips most files — the same job a date partitioning or an index on the
+    incremental key does (a daily delta touches one day's files).  It is
+    the only layout: a reader skips data through the zone maps every
+    writer records, never through a layout a writer must opt into.
   * **Time travel**: `read(version=k)` replays the log only to k.
   * **Checkpoints**: every `CHECKPOINT_INTERVAL` commits the full live set
     is written to `<version>.checkpoint.json`, so snapshot construction is
@@ -83,8 +86,6 @@ class AddFile:
     path: str  # relative to table root
     rows: int
     stats: dict  # col -> {"min": v, "max": v, "nulls": n}
-    partition_values: dict | None = None  # identity-partition col -> value
-    bucket: int | None = None  # hash-bucket id under bucket_spec
 
 
 @dataclass
@@ -94,10 +95,7 @@ class Snapshot:
     version: int
     live: dict[str, dict]  # rel_path -> add action
     schema: dict | None  # StructType JSON; None only before the first commit
-    # CURRENT partition/bucket spec and checks (Iceberg-style spec
-    # evolution: the latest commit that declared a spec wins, but files keep
-    # the metadata of the spec they were written under)
-    props: dict
+    props: dict  # {"checks": {name: predicate}}; the latest commit's wins
 
 
 def _version_path(log: str, v: int, checkpoint: bool = False) -> str:
@@ -250,10 +248,6 @@ class TxnTable:
             raise ValueError(f"no commit at or before ts={ts}")
         return self.read(version=v)
 
-    def partition_spec(self, version: int | None = None) -> list[str]:
-        """Current identity-partition columns ([] = unpartitioned)."""
-        return snapshot(self.path, version).props.get("partition_spec", [])
-
     # -------------------------------------------------------- constraints --
 
     def checks(self, version: int | None = None) -> dict[str, str]:
@@ -304,10 +298,6 @@ class TxnTable:
                     f"check '{n}' ({checks[n]}) fails for {row[f'c{i}']} "
                     "incoming row(s)")
 
-    def bucket_spec(self, version: int | None = None) -> dict | None:
-        """Current hash-bucket layout, e.g. {"col": "k", "n": 8}, or None."""
-        return snapshot(self.path, version).props.get("bucket_spec")
-
     def _commit(self, op: str, actions: list[dict], expected_version: int,
                 schema: dict | None, meta: dict | None = None,
                 props: dict | None = None) -> int:
@@ -341,117 +331,50 @@ class TxnTable:
 
     # -------------------------------------------------------------- write --
 
-    def _write_files(self, df: DataFrame, cluster_by: Sequence[str] | None,
-                     partition_by: Sequence[str] | None = None,
-                     bucket_by: dict | None = None) -> list[dict]:
+    def _write_files(self, df: DataFrame, cluster_by: str | None) -> list[dict]:
         """Write df as immutable parquet files under a fresh commit dir and
-        return their add-actions with per-file stats (``footer_stats``).
+        return their add-actions with per-file zone maps (``footer_stats``).
 
-        ``cluster_by`` range-partitions the write so each file covers a
-        tight value range, which is what makes min/max pruning selective:
-        on one column directly, on two or more by their Z-order key
-        (``zorder_key``), which keeps every one of them tight at once.
-        ``partition_by`` writes hive-layout identity partitions; each file's
-        partition values are parsed from its path into the add-action, so
-        reads/pruning never re-list or re-parse directories (the
-        Iceberg-manifest approach: partition data lives in table metadata).
-        ``bucket_by`` ({"col": c, "n": n}) hash-partitions rows with Spark's
-        own HashPartitioning (pmod(murmur3, n)) and records each file's
-        bucket id — the part-file index IS the partition id on a
-        deterministic one-stage write."""
+        ``cluster_by`` range-partitions the write on that column, so each
+        file covers a tight value range of it, which is what makes min/max
+        pruning selective."""
         commit_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
-        out = df
-        if bucket_by:
-            out = df.repartition(int(bucket_by["n"]), F.col(bucket_by["col"]))
-        elif cluster_by:
+        if cluster_by:
             # The partition count is pinned explicitly so AQE doesn't
             # coalesce small test inputs into one file (at scale, pick
             # ~table_bytes / 1 GB).
             n = max(df.rdd.getNumPartitions(), 2)
-            if len(cluster_by) == 1:
-                out = df.repartitionByRange(n, F.col(cluster_by[0]))
-            else:
-                out = (
-                    df.withColumn("__zkey__", zorder_key(df, cluster_by))
-                    .repartitionByRange(n, F.col("__zkey__"))
-                    .sortWithinPartitions("__zkey__")
-                    .drop("__zkey__")
-                )
-        writer = out.write.mode("error")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(commit_dir)
-        from urllib.parse import unquote
-
-        files = sorted(
-            os.path.join(r, fn)
-            for r, _, fns in os.walk(commit_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
-        )
+            df = df.repartitionByRange(n, F.col(cluster_by))
+        df.write.mode("error").parquet(commit_dir)
         actions = []
-        for fpath in files:
+        for fpath in sorted(glob.glob(os.path.join(commit_dir, "*.parquet"))):
             rows, stats = footer_stats(fpath)
-            add = {
+            actions.append({"add": {
                 "path": os.path.relpath(fpath, self.path),
                 "rows": rows,
                 "bytes": os.path.getsize(fpath),
                 "stats": stats,
-            }
-            if partition_by:
-                pv = {}
-                rel = os.path.relpath(fpath, commit_dir)
-                for seg in rel.split(os.sep)[:-1]:
-                    col, _, raw = seg.partition("=")
-                    pv[col] = (
-                        None if raw == "__HIVE_DEFAULT_PARTITION__"
-                        else _coerce_scalar(unquote(raw))
-                    )
-                add["partition_values"] = pv
-            if bucket_by:
-                # part-00037-<uuid>.parquet -> partition (= bucket) id 37
-                add["bucket"] = int(os.path.basename(fpath).split("-")[1])
-                add["bucket_spec"] = {"col": bucket_by["col"], "n": int(bucket_by["n"])}
-            actions.append({"add": add})
+            }})
         return actions
 
     def _rewrite(self, op: str, snap: Snapshot, removed: Sequence[str],
                  df: DataFrame, meta: dict | None = None, *, check: bool = True,
-                 schema: dict | None = None,
-                 cluster_by: Sequence[str] | None = None,
-                 partition_by: Sequence[str] | None = None,
-                 bucket_by: dict | None = None) -> int:
+                 schema: dict | None = None, cluster_by: str | None = None) -> int:
         """The copy-on-write commit every write shares: remove the ``removed``
         live files of ``snap``, write ``df`` as new files and commit both at
-        ``snap.version + 1`` with ``schema`` (default: ``df``'s).
-
-        ``partition_by``/``bucket_by`` both lay out THIS write and evolve the
-        table's current spec (recorded in commit props — old files keep the
-        spec they were written under, Iceberg-style). Omitting them keeps the
-        current spec. ``check`` enforces the table's CHECK constraints on
-        ``df`` before anything is written."""
-        props = {}
-        if partition_by is not None:
-            props["partition_spec"] = list(partition_by)
-        if bucket_by is not None:
-            props["bucket_spec"] = {"col": bucket_by["col"], "n": int(bucket_by["n"])}
-        spec = {**snap.props, **props}
+        ``snap.version + 1`` with ``schema`` (default: ``df``'s). ``check``
+        enforces the table's CHECK constraints on ``df`` before anything is
+        written."""
         if check:
-            self._enforce(spec.get("checks", {}), df)
-        actions = [{"remove": _remove_action(snap.live[p])} for p in removed]
-        actions += self._write_files(df, cluster_by,
-                                     partition_by=spec.get("partition_spec") or None,
-                                     bucket_by=spec.get("bucket_spec"))
+            self._enforce(snap.props.get("checks", {}), df)
+        actions = [{"remove": {"path": p}} for p in removed]
+        actions += self._write_files(df, cluster_by)
         return self._commit(op, actions, snap.version + 1,
-                            schema or df.schema.jsonValue(), meta, props or None)
+                            schema or df.schema.jsonValue(), meta)
 
-    def append(self, df: DataFrame, cluster_by: Sequence[str] | None = None,
-               meta: dict | None = None, merge_schema: bool = False,
-               partition_by: Sequence[str] | None = None,
-               bucket_by: dict | None = None) -> int:
-        """Append; ``partition_by``/``bucket_by`` evolve the layout as in
-        ``_rewrite`` — an existing partition spec is applied to the incoming
-        batch automatically.
+    def append(self, df: DataFrame, cluster_by: str | None = None,
+               meta: dict | None = None, merge_schema: bool = False) -> int:
+        """Append ``df`` as new files, range-clustered on ``cluster_by``.
 
         Delta-style schema strictness: widening the schema (new columns)
         needs an explicit ``merge_schema=True``; silent drift is an error.
@@ -468,20 +391,16 @@ class TxnTable:
                     f"schema adds columns {sorted(new_cols - old_cols)}; "
                     "pass merge_schema=True to evolve"
                 )
-        return self._rewrite("append", snap, [], df, meta, cluster_by=cluster_by,
-                             partition_by=partition_by, bucket_by=bucket_by)
+        return self._rewrite("append", snap, [], df, meta, cluster_by=cluster_by)
 
-    def overwrite(self, df: DataFrame, cluster_by: Sequence[str] | None = None,
-                  meta: dict | None = None,
-                  partition_by: Sequence[str] | None = None,
-                  bucket_by: dict | None = None) -> int:
+    def overwrite(self, df: DataFrame, cluster_by: str | None = None,
+                  meta: dict | None = None) -> int:
         snap = snapshot(self.path)
         return self._rewrite("overwrite", snap, list(snap.live), df, meta,
-                             cluster_by=cluster_by, partition_by=partition_by,
-                             bucket_by=bucket_by)
+                             cluster_by=cluster_by)
 
     def merge(self, source: DataFrame, keys: Sequence[str],
-              cluster_by: Sequence[str] | None = None,
+              cluster_by: str | None = None,
               prune_col: str | None = None, **merge_kwargs) -> int:
         """Copy-on-write MERGE: run the relational merge (operators/merge.py
         — the engine's S6-S8 semantics) against the target snapshot and
@@ -490,48 +409,36 @@ class TxnTable:
 
         With ``prune_col`` (an integer, floating-point, date or
         timestamp-without-time-zone column, the types every file has zone
-        maps for), the rewrite is FILE-GRANULAR: the batch's [min, max] on
-        that column (one tiny aggregation) selects only the target files
-        whose zone maps overlap; untouched files stay in the snapshot as-is
-        — the Delta/Iceberg merge-on-read-competitive path.  A daily delta
-        against a date-clustered 100 TB table rewrites one day's files, not
-        the table.  Rows outside the touched files are untouched by
-        construction: their key ranges cannot intersect the batch.  Without
-        ``prune_col``, the whole live set rewrites.
-
-        On a bucketed table whose bucket column is one of ``keys``, pruning
-        is automatic: the source's distinct bucket ids (pmod(murmur3, n) —
-        Spark's own HashPartitioning function, so file bucket ids and the
-        computed ids agree by construction) select the touched files; files
-        from before the bucket spec (no bucket metadata) are always
-        rewritten.  A small delta against a 1000-bucket table rewrites only
-        the buckets its keys hash into."""
+        maps for), the rewrite is FILE-GRANULAR: one tiny aggregation takes
+        the batch's row count, NULL count and [min, max] on that column, and
+        only the target files that may hold a matching row are rewritten —
+        those whose zone maps overlap [min, max], those whose zone maps count
+        NULLs when the batch has a NULL, and those with no zone map.
+        Untouched files stay in the snapshot as-is — the Delta/Iceberg
+        merge-on-read-competitive path.  A daily delta against a table
+        clustered by date rewrites one day's files, not the table.  This
+        holds when a key's ``prune_col`` value never changes, as an event
+        timestamp does not.  An empty batch commits nothing and returns the
+        head version.  Without ``prune_col``, the whole live set rewrites."""
         from etl_mssql_to_postgres_dailysync_spark.operators.merge import merge as rel_merge
 
         snap = snapshot(self.path)
         live = snap.live
-        bspec = snap.props.get("bucket_spec")
-        if prune_col is None and bspec and bspec["col"] in keys:
-            ids = {
-                r[0]
-                for r in source.select(
-                    F.pmod(F.hash(F.col(bspec["col"])), F.lit(int(bspec["n"])))
-                ).distinct().collect()
-            }
+        touched = list(live)
+        if prune_col is not None:
+            c = F.col(prune_col)
+            b = source.agg(F.count(F.lit(1)).alias("n"),
+                           F.count_if(c.isNull()).alias("nulls"),
+                           F.min(c).alias("lo"), F.max(c).alias("hi")).first()
+            if not b["n"]:
+                return snap.version
+            lo, hi = _json_safe(b["lo"]), _json_safe(b["hi"])
+            # a file with no zone map on prune_col may hold anything, NULLs too
             touched = [
                 p for p, a in live.items()
-                if a.get("bucket") is None
-                or a.get("bucket_spec") != bspec
-                or a["bucket"] in ids
+                if (lo is not None and _may_hold(a, prune_col, lo, hi))
+                or (b["nulls"] and a.get("stats", {}).get(prune_col, {"nulls": 1})["nulls"])
             ]
-        elif prune_col is not None:
-            lohi = source.agg(
-                F.min(F.col(prune_col)).alias("lo"), F.max(F.col(prune_col)).alias("hi")
-            ).first()
-            touched = [a["path"] for a in _pruned(live, (
-                prune_col, _json_safe(lohi["lo"]), _json_safe(lohi["hi"])))]
-        else:
-            touched = list(live)
         target = self._read_add_files([live[p] for p in touched],
                                       snap.schema or source.schema.jsonValue())
         merged = rel_merge(target, source, keys, **merge_kwargs).df
@@ -626,24 +533,18 @@ class TxnTable:
             raise ValueError(
                 f"cannot restore to v{version}: {len(missing)} file(s) "
                 f"vacuumed, e.g. {missing[0]}")
-        actions = [{"remove": _remove_action(live[p])}
-                   for p in live if p not in want]
+        actions = [{"remove": {"path": p}} for p in live if p not in want]
         actions += [{"add": want[p]} for p in want if p not in live]
         return self._commit(
             "restore", actions, head.version + 1, target.schema,
             {"restored_to": version,
              "files_added": sum(1 for p in want if p not in live),
-             "files_removed": sum(1 for p in live if p not in want)},
-            # explicit reset: the TARGET's layout wins even when the target
-            # predates a later spec evolution (absent key would not clear it)
-            props={"partition_spec": target.props.get("partition_spec", []),
-                   "bucket_spec": target.props.get("bucket_spec")})
+             "files_removed": sum(1 for p in live if p not in want)})
 
     def compact(self, num_files: int | None = None, target_mb: int | None = None) -> int:
         """Rewrite the live set into ``num_files`` files (bin-packing OPTIMIZE);
-        a normal commit, so time travel before it still works. A partition/
-        bucket spec survives compaction (bucketed tables compact per bucket —
-        the layout IS the file count).
+        a normal commit, so time travel before it still works. The output is
+        not re-clustered: each file's zone maps are measured anew.
 
         ``target_mb`` sizes the output from LOG metadata instead: num_files =
         ceil(live_bytes / target) — the small-file compactor needs no data
@@ -656,9 +557,7 @@ class TxnTable:
                 num_files = max(1, -(-total // (target_mb * 1024 * 1024)))
             else:
                 num_files = 1
-        df = self._read_add_files(list(snap.live.values()), snap.schema)
-        if not snap.props.get("bucket_spec"):
-            df = df.coalesce(num_files)
+        df = self._read_add_files(list(snap.live.values()), snap.schema).coalesce(num_files)
         # same rows, already checked when they were written
         return self._rewrite("compact", snap, list(snap.live), df, check=False)
 
@@ -669,8 +568,7 @@ class TxnTable:
         """Live files at ``version``, optionally zone-map-pruned by
         ``(col, lo, hi)`` predicates (lo/hi inclusive, None = unbounded)."""
         return [
-            AddFile(a["path"], a["rows"], a.get("stats", {}),
-                    a.get("partition_values"), a.get("bucket"))
+            AddFile(a["path"], a["rows"], a.get("stats", {}))
             for a in _pruned(snapshot(self.path, version).live, prune)
         ]
 
@@ -678,34 +576,12 @@ class TxnTable:
         """Scan a set of add-actions as one DataFrame with the logged
         ``schema``: the scan is declared, not inferred from the footers, so
         building it runs no Spark job; columns a file predates read as NULL
-        and the columns come in logged order.
-
-        Hive-layout files don't store their partition columns in the data;
-        re-attach them as literals from LOG metadata (never by re-parsing
-        paths at scan time). One scan per distinct partition tuple — a
-        spec-evolution read unions the per-spec scans, so each branch still
-        gets pushdown/pruning independently."""
+        and the columns come in logged order."""
         stype = StructType.fromJson(schema) if schema else StructType([])
         if not adds:
             return self.spark.createDataFrame([], stype)
-        groups: dict[tuple, list[str]] = {}
-        for a in adds:
-            key = tuple(sorted((a.get("partition_values") or {}).items()))
-            groups.setdefault(key, []).append(os.path.join(self.path, a["path"]))
-        parts = []
-        for key, paths in sorted(groups.items(), key=lambda kv: str(kv[0])):
-            pv = dict(key)
-            data = StructType([f for f in stype.fields if f.name not in pv])
-            df = self.spark.read.schema(data).parquet(*paths)
-            parts.append(df.select(*[
-                F.lit(pv[f.name]).cast(f.dataType).alias(f.name) if f.name in pv
-                else F.col(f.name)
-                for f in stype.fields
-            ]))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.union(p)
-        return df
+        return self.spark.read.schema(stype).parquet(
+            *[os.path.join(self.path, a["path"]) for a in adds])
 
     def read(self, version: int | None = None, prune=None) -> DataFrame:
         snap = snapshot(self.path, version)
@@ -715,22 +591,11 @@ class TxnTable:
 
     def files_df(self, version: int | None = None) -> DataFrame:
         """The live file manifest as a DataFrame (Delta DESCRIBE DETAIL /
-        Iceberg ``.files`` analog): operational queries — size skew, bucket
-        balance, partition counts, stats coverage — run as ordinary Spark
-        over METADATA, never scanning data."""
-        rows = [
-            (
-                f.path,
-                f.rows,
-                f.bucket,
-                json.dumps(f.partition_values) if f.partition_values else None,
-                json.dumps(f.stats, sort_keys=True),
-            )
-            for f in self.files(version)
-        ]
-        return self.spark.createDataFrame(
-            rows, "path string, rows long, bucket int, partition_values string, stats string"
-        )
+        Iceberg ``.files`` analog): operational queries — size skew, stats
+        coverage — run as ordinary Spark over METADATA, never scanning data."""
+        rows = [(f.path, f.rows, json.dumps(f.stats, sort_keys=True))
+                for f in self.files(version)]
+        return self.spark.createDataFrame(rows, "path string, rows long, stats string")
 
     def history_df(self) -> DataFrame:
         """The commit history as a DataFrame (DESCRIBE HISTORY analog)."""
@@ -765,68 +630,31 @@ class TxnTable:
                 if rel not in referenced:
                     os.unlink(f)
                     deleted.append(rel)
-        # drop now-empty commit/partition dirs bottom-up
+        # drop now-empty commit dirs
         for r, dirs, fns in os.walk(data_root, topdown=False):
             if r != data_root and not os.listdir(r):
                 shutil.rmtree(r)
         return deleted
 
 
+def _may_hold(add: dict, col: str, lo, hi) -> bool:
+    """Whether the file of ``add`` may hold a ``col`` value in [lo, hi]
+    (inclusive, None = unbounded): False only when its zone map rules it
+    out."""
+    st = add.get("stats", {}).get(col)
+    if st is None or st["min"] is None:
+        return True  # no zone map -> cannot prune, must read
+    return not ((hi is not None and str_cmp(st["min"], hi) > 0)
+                or (lo is not None and str_cmp(st["max"], lo) < 0))
+
+
 def _pruned(live: dict[str, dict], prune: tuple | list | None) -> list[dict]:
-    """The add-actions of ``live`` that ``(col, lo, hi)`` predicates (lo/hi
-    inclusive, None = unbounded) cannot rule out by partition value or
-    zone map."""
+    """The add-actions of ``live`` that no ``(col, lo, hi)`` predicate of
+    ``prune`` rules out by zone map."""
     preds = []
     if prune:
         preds = [prune] if isinstance(prune, tuple) else list(prune)
-    out = []
-    for a in live.values():
-        keep = True
-        for col, lo, hi in preds:
-            pv = a.get("partition_values") or {}
-            if col in pv and pv[col] is not None:
-                # identity-partition value: exact containment check
-                v = pv[col]
-                if (hi is not None and str_cmp(v, hi) > 0) or (
-                    lo is not None and str_cmp(v, lo) < 0
-                ):
-                    keep = False
-                    break
-                continue
-            st = a.get("stats", {}).get(col)
-            if st is None or st["min"] is None:
-                continue  # no stats -> cannot prune, must read
-            if (hi is not None and str_cmp(st["min"], hi) > 0) or (
-                lo is not None and str_cmp(st["max"], lo) < 0
-            ):
-                keep = False
-                break
-        if keep:
-            out.append(a)
-    return out
-
-
-def _remove_action(add: dict) -> dict:
-    """Remove-actions echo the file's layout metadata so downstream CDC
-    readers can reconstruct hive-partition columns for retracted rows."""
-    out = {"path": add["path"]}
-    if add.get("partition_values") is not None:
-        out["partition_values"] = add["partition_values"]
-    if add.get("bucket") is not None:
-        out["bucket"] = add["bucket"]
-    return out
-
-
-def _coerce_scalar(raw: str):
-    """Partition values parsed from a hive path are strings; store ints/
-    floats natively so pruning compares numerically, not lexically."""
-    try:
-        return int(raw)
-    except ValueError:
-        try:
-            return float(raw)
-        except ValueError:
-            return raw
+    return [a for a in live.values() if all(_may_hold(a, *p) for p in preds)]
 
 
 def _json_safe(v):
@@ -892,37 +720,3 @@ def table_changes(table: TxnTable, v_from: int, v_to: int,
         )
         out = out.unionByName(pre)
     return out
-
-
-def zorder_key(df: DataFrame, cols: Sequence[str], bits: int = 16):
-    """Morton (Z-order) key over numeric columns: each value is min-max
-    scaled to ``bits`` bits (one tiny stats aggregation), then bit-planes
-    are interleaved — points close in EVERY dimension get close keys, so
-    range-clustering the write by this key keeps per-file min/max tight on
-    ALL the z-ordered columns at once.  Linear cluster_by gives perfect
-    pruning on one column and none on the others; Z-order trades a little
-    of the first for usable pruning on each (the standard lakehouse
-    OPTIMIZE ZORDER BY design).  Returns the key Column; computing the
-    scale runs one aggregation job."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(F.col(c).cast("double")).alias(f"__lo_{c}"),
-                 F.max(F.col(c).cast("double")).alias(f"__hi_{c}")]
-    st = df.agg(*aggs).first()
-    planes = []
-    top = (1 << bits) - 1
-    for i, c in enumerate(cols):
-        lo, hi = st[f"__lo_{c}"], st[f"__hi_{c}"]
-        span = (hi - lo) or 1.0
-        scaled = F.least(
-            F.lit(top),
-            ((F.col(c).cast("double") - F.lit(lo)) * top / F.lit(span)).cast("long"),
-        )
-        for b in range(bits):
-            planes.append(
-                F.shiftleft(F.shiftright(scaled, b).bitwiseAND(F.lit(1)), b * len(cols) + i)
-            )
-    key = planes[0]
-    for p in planes[1:]:
-        key = key + p
-    return key

@@ -52,12 +52,10 @@ from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import (
 
 
 class _ChangedFile(InputPartition):
-    def __init__(self, path: str, sign: int, version: int,
-                 partition_values: dict | None):
+    def __init__(self, path: str, sign: int, version: int):
         self.path = path
         self.sign = sign
         self.version = version
-        self.partition_values = partition_values or {}
 
 
 class TxnTableCdcStreamReader(DataSourceStreamReader):
@@ -79,18 +77,12 @@ class TxnTableCdcStreamReader(DataSourceStreamReader):
             commit = read_commit(self.table_path, v)
             for action in commit["actions"]:
                 if "add" in action:
-                    a = action["add"]
-                    parts.append(
-                        _ChangedFile(a["path"], +1, v, a.get("partition_values"))
-                    )
+                    parts.append(_ChangedFile(action["add"]["path"], +1, v))
                 elif "remove" in action:
                     # the remove action only names the path; rows come from
                     # the (immutable, still-present) file itself. vacuum()
                     # must retain versions the stream hasn't committed past.
-                    r = action["remove"]
-                    parts.append(
-                        _ChangedFile(r["path"], -1, v, r.get("partition_values"))
-                    )
+                    parts.append(_ChangedFile(action["remove"]["path"], -1, v))
         return parts
 
     def read(self, partition: _ChangedFile) -> Iterator[tuple]:
@@ -98,21 +90,12 @@ class TxnTableCdcStreamReader(DataSourceStreamReader):
 
         fpath = os.path.join(self.table_path, partition.path)
         table = pq.read_table(fpath)
-        data_cols = set(table.column_names)
+        meta = {"_sign": partition.sign, "_version": partition.version}
         out_fields = [f.name for f in self.schema.fields]
         for row in table.to_pylist():
-            vals = []
-            for name in out_fields:
-                if name == "_sign":
-                    vals.append(partition.sign)
-                elif name == "_version":
-                    vals.append(partition.version)
-                elif name in data_cols:
-                    vals.append(row[name])
-                else:
-                    # hive-layout partition column: value lives in metadata
-                    vals.append(partition.partition_values.get(name))
-            yield tuple(vals)
+            row.update(meta)
+            # a column the file predates reads as NULL
+            yield tuple(row.get(name) for name in out_fields)
 
     def commit(self, end: dict) -> None:
         pass
@@ -134,9 +117,11 @@ class TxnTableCdcDataSource(DataSource):
         schema = snapshot(table_path).schema
         if schema is None:
             raise ValueError(f"no committed schema in {table_path}")
-        base = StructType.fromJson(schema)
+        # every table column is nullable, as in a parquet scan: a file that
+        # predates a column reads NULL in it whatever the widening batch said
         return StructType(
-            base.fields
+            [StructField(f.name, f.dataType, True, f.metadata)
+             for f in StructType.fromJson(schema).fields]
             + [StructField("_sign", IntegerType()), StructField("_version", LongType())]
         )
 

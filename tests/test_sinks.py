@@ -1,7 +1,7 @@
-"""Sink tests: the date-partitioned layout of an owned table (a TxnTable),
-with partition-pruning verification — the storage half of the 100 TB
-design: a daily merge rewrites ONE partition, and a daily read scans ONE
-partition. Every write here is a TxnTable commit, so no write reads the
+"""Sink tests: the date-clustered layout of an owned table (a TxnTable),
+with zone-map pruning verification — the storage half of the 100 TB
+design: a daily merge rewrites ONE day's files, and a daily read scans ONE
+day's files. Every write here is a TxnTable commit, so no write reads the
 path it replaces.
 """
 
@@ -31,24 +31,30 @@ def _busiest_day(src):
 
 
 def _files_of_other_days(t, day):
-    # hive partition values are logged as their path strings
+    # zone-map dates are logged as ISO strings, which order as dates do
+    day = str(day)
     return {f.path for f in t.files()
-            if f.partition_values["order_date"] != str(day)}
+            if f.stats["order_date"]["max"] < day or f.stats["order_date"]["min"] > day}
 
 
 def test_partitioned_write_prunes_on_read(spark, tdir):
     src = _dated_orders(spark, 1000)
     t = TxnTable(spark, tdir)
-    t.append(src, partition_by=["order_date"])
+    t.append(src, cluster_by="order_date")
     assert t.read().count() == src.count()
 
     some_date = str(src.select("order_date").first()["order_date"])
     day = ("order_date", some_date, some_date)
-    # the date predicate prunes by logged partition value -> one day's files
+    # the date predicate prunes by zone map -> only files holding that day
     pruned = t.files(prune=day)
     assert 0 < len(pruned) < len(t.files())
-    assert all(f.partition_values["order_date"] == some_date for f in pruned)
-    assert t.read(prune=day).count() == src.filter(
+    assert all(f.stats["order_date"]["min"] <= some_date <= f.stats["order_date"]["max"]
+               for f in pruned)
+    # whole files are read: the day's rows all come back, with fewer others
+    # than a full scan
+    back = t.read(prune=day)
+    assert back.count() < src.count()
+    assert back.filter(F.col("order_date") == F.lit(some_date)).count() == src.filter(
         F.col("order_date") == F.lit(some_date)
     ).count()
 
@@ -56,10 +62,10 @@ def test_partitioned_write_prunes_on_read(spark, tdir):
 def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tdir):
     src = _dated_orders(spark, 500)
     t = TxnTable(spark, tdir)
-    t.append(src, partition_by=["order_date"])
+    t.append(src, cluster_by="order_date")
     total = src.count()
 
-    # rewrite ONE day with modified amounts; all other partitions untouched
+    # rewrite ONE day with modified amounts; all other days' files untouched
     some_date = _busiest_day(src)
     orig_day = src.filter(F.col("order_date") == F.lit(some_date))
     one_day = orig_day.withColumn(
@@ -70,7 +76,7 @@ def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tdir):
 
     assert others and others <= {f.path for f in t.files()}
     back = t.read()
-    assert back.count() == total  # only the day's partition was replaced
+    assert back.count() == total  # only the day's files were replaced
     changed = back.filter(F.col("order_date") == F.lit(some_date))
     assert float(changed.agg(F.sum("Amount")).first()[0]) == pytest.approx(
         float(orig_day.agg(F.sum("Amount")).first()[0]) + orig_day.count()
@@ -78,12 +84,12 @@ def test_dynamic_partition_overwrite_touches_only_batch_partitions(spark, tdir):
 
 
 def test_merge_into_partitioned_parquet_touches_only_batch_partitions(spark, tdir):
-    """A daily delta merged with ``prune_col`` on the partition column
-    rewrites only that day's files: every other partition's files stay live
-    by path, the day's rows all update and its inserts land."""
+    """A daily delta merged with ``prune_col`` on the clustering column
+    rewrites only that day's files: every other day's files stay live by
+    path, the day's rows all update and its inserts land."""
     src = _dated_orders(spark, 800)
     t = TxnTable(spark, tdir)
-    t.append(src, partition_by=["order_date"])
+    t.append(src, cluster_by="order_date")
     total = src.count()
 
     # delta: updates + inserts confined to ONE day

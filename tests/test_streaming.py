@@ -164,6 +164,23 @@ def test_txn_merge_sink_commits_no_empty_quarantine(spark, tmpdir):
         fake_orders(spark, 300).filter(F.col("OrderCreatedAt").isNotNull()).count() + 5)
 
 
+def test_txn_merge_sink_commits_no_all_null_timestamp_batch(spark, tmpdir):
+    """A batch whose every timestamp is NULL goes wholly to the quarantine;
+    the target sink, pruned by that timestamp, merges an empty batch and
+    commits nothing."""
+    from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import TxnTable
+
+    sink = _quarantine_sink(tmpdir, cluster_by="OrderCreatedAt",
+                            prune_col="OrderCreatedAt")
+    sink(fake_orders(spark, 300).repartition(4), 0)
+    target = TxnTable(spark, f"{tmpdir}/target")
+    quarantine = TxnTable(spark, f"{tmpdir}/quarantine")
+    version, n = target.version(), quarantine.read().count()
+    sink(_orders_rows(spark, [(k, None) for k in range(20_001, 20_004)]), 1)
+    assert target.version() == version
+    assert quarantine.read().count() == n + 3
+
+
 def test_txn_merge_sink_prunes_other_days(spark, tmpdir):
     """A sink clustered and pruned by the event timestamp rewrites only the
     files whose zone maps overlap a one-day batch; the other days' files
@@ -172,7 +189,7 @@ def test_txn_merge_sink_prunes_other_days(spark, tmpdir):
 
     sink = runner.txn_merge_sink(
         f"{tmpdir}/target", ["OrderID"],
-        cluster_by=["OrderCreatedAt"], prune_col="OrderCreatedAt",
+        cluster_by="OrderCreatedAt", prune_col="OrderCreatedAt",
     )
     orders = fake_orders(spark, 400).filter(F.col("OrderCreatedAt").isNotNull())
     sink(orders.repartition(8), 0)

@@ -131,16 +131,14 @@ class TestCdcSource:
         assert spark.read.parquet(f"{base}/state").agg(F.sum("n_rows")).first()[0] == 7
 
     def test_partitioned_table_cdc_reconstructs_partition_column(self, spark, sf_dir, base):
-        """Hive-layout files lack the partition column in-file; the source
-        reattaches it from commit metadata for adds AND removes."""
+        """The grouping column the rollup keys on is read from the files
+        themselves: no group of the maintained state is NULL."""
         _register(spark)
         t = TxnTable(spark, f"{base}/tbl")
-        # r11: 60 rows ≈ up to 60 hive partitions (was 200 — suite-budget
-        # trim, same multi-partition reconstruction property)
         orders = _orders(spark, sf_dir).withColumn(
             "day", F.to_date("o_orderdate").cast("string")
         ).limit(60)
-        t.append(orders, partition_by=["day"])
+        t.append(orders)
         fb = rollup_maintainer(
             spark, f"{base}/state", ["day"],
             {"revenue_cents": "CAST(round(o_totalprice * 100) AS BIGINT)"},
@@ -156,6 +154,43 @@ class TestCdcSource:
         got = spark.read.parquet(f"{base}/state")
         assert got.filter(F.col("day").isNull()).count() == 0
         _assert_state_matches(spark, f"{base}/state", t)
+
+    def test_schema_widened_table_reads_null_for_older_files(self, spark, sf_dir, base):
+        """Files written before a column was added stream NULL in it, and
+        the rollup over both schemas equals the recompute from the head."""
+        _register(spark)
+        t = TxnTable(spark, f"{base}/tbl")
+        orders = _orders(spark, sf_dir).orderBy("o_orderkey")
+        t.append(orders.filter(F.col("o_orderkey") % 2 == 0).limit(30))
+        t.append(orders.filter(F.col("o_orderkey") % 2 == 1).limit(20)
+                 .withColumn("channel", F.lit("web")), merge_schema=True)
+        web = "CASE WHEN channel = 'web' THEN 1 ELSE 0 END"
+        maintain = rollup_maintainer(
+            spark, f"{base}/state", ["day"],
+            {"revenue_cents": "CAST(round(o_totalprice * 100) AS BIGINT)",
+             "n_web": web},
+        )
+
+        def fb(batch, batch_id):
+            batch.write.mode("append").parquet(f"{base}/rows")
+            maintain(batch, batch_id)
+
+        s = (
+            spark.readStream.format("txntable_cdc").option("path", f"{base}/tbl").load()
+            .withColumn("day", F.to_date("o_orderdate").cast("string"))
+        )
+        (s.writeStream.foreachBatch(fb).option("checkpointLocation", f"{base}/ck")
+         .trigger(availableNow=True).start().awaitTermination())
+        rows = spark.read.parquet(f"{base}/rows")
+        assert rows.filter("_version = 0").count() == 30
+        assert rows.filter("_version = 0 AND channel IS NOT NULL").count() == 0
+        assert rows.filter("_version = 1 AND channel = 'web'").count() == 20
+        got = spark.read.parquet(f"{base}/state")
+        exp = _recompute(t).join(
+            t.read().groupBy(F.to_date("o_orderdate").cast("string").alias("day"))
+            .agg(F.sum(F.expr(web)).alias("n_web")), "day")
+        assert got.exceptAll(exp.select(*got.columns)).count() == 0
+        assert exp.select(*got.columns).exceptAll(got).count() == 0
 
 
 class TestStreamingDedupIndex:
@@ -544,21 +579,15 @@ class TestPartitionedMergeCdc:
     def test_merge_on_partitioned_table_retracts_with_partition_values(
         self, spark, sf_dir, base
     ):
-        """A merge on a hive-partitioned table removes+re-adds partitioned
-        files; the retraction rows must reconstruct the partition column
-        from the REMOVE action's metadata, or the maintained rollup would
-        subtract from a NULL group and diverge."""
+        """A merge removes and re-adds files; the retraction rows must carry
+        the grouping column of the removed rows, or the maintained rollup
+        would subtract from a NULL group and diverge."""
         _register(spark)
         t = TxnTable(spark, f"{base}/tbl")
-        # r11: 60 rows ≈ up to 60 hive partitions — the retraction property
-        # (REMOVE metadata must reconstruct the partition value) only needs
-        # several rewritten partitions, and 300 one-row partition dirs made
-        # this single test ~138 s (the whole-suite budget the round driver
-        # truncated at; r10 verdict ask #2c).
         orders = _orders(spark, sf_dir).withColumn(
             "day", F.to_date("o_orderdate").cast("string")
         ).limit(60)
-        t.append(orders, partition_by=["day"])
+        t.append(orders)
         _run_stream(spark, f"{base}/tbl", f"{base}/state", f"{base}/ck")
         _assert_state_matches(spark, f"{base}/state", t)
 

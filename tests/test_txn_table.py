@@ -5,6 +5,7 @@ Covers the guarantees the reference delegates to its target databases
 optimistic concurrency, snapshot isolation / time travel, stats pruning,
 compaction and vacuum."""
 
+import datetime
 import json
 import os
 import uuid
@@ -46,19 +47,6 @@ def _widening(spark, sf_dir, tdir, cols=("o_orderkey", "o_totalprice", "channel"
         .select(*cols)
     )
     return t, widened
-
-
-def _spec_evolved(spark, sf_dir, tdir):
-    """300 orders plus ``status`` in three appends: v0 unpartitioned, v1
-    partitioned by ``status``, v2 inheriting that spec."""
-    t = TxnTable(spark, tdir)
-    orders = _orders(spark, sf_dir).limit(300).withColumn(
-        "status", F.col("o_orderstatus")
-    )
-    t.append(orders.filter(F.col("o_orderkey") % 3 == 0))
-    t.append(orders.filter(F.col("o_orderkey") % 3 == 1), partition_by=["status"])
-    t.append(orders.filter(F.col("o_orderkey") % 3 == 2))
-    return t
 
 
 class TestCommitProtocol:
@@ -132,7 +120,7 @@ class TestPruningCompactVacuum:
     def test_stats_pruning_skips_files(self, spark, sf_dir, tdir):
         t = TxnTable(spark, tdir)
         df = _orders(spark, sf_dir).repartition(8)
-        t.append(df, cluster_by=["o_orderkey"])
+        t.append(df, cluster_by="o_orderkey")
         all_files = t.files()
         pruned = t.files(prune=("o_orderkey", 0, 10))
         assert len(pruned) < len(all_files)
@@ -196,28 +184,6 @@ class TestChanges:
         assert {r["_change_type"] for r in c12.select("_change_type").distinct().collect()} == {"delete"}
         assert c12.count() == 25
 
-
-class TestZOrder:
-    def test_zorder_prunes_on_both_dimensions(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        df = _orders(spark, sf_dir).repartition(16)
-        t.append(df, cluster_by=["o_orderkey", "o_custkey"])
-        n_all = len(t.files())
-        lo_k = df.agg(F.min("o_orderkey")).first()[0]
-        lo_c = df.agg(F.min("o_custkey")).first()[0]
-        pruned_k = t.files(prune=("o_orderkey", lo_k, lo_k + 20))
-        pruned_c = t.files(prune=("o_custkey", lo_c, lo_c + 20))
-        # z-order keeps BOTH columns' per-file ranges tight: pruning works on each
-        assert len(pruned_k) < n_all
-        assert len(pruned_c) < n_all
-        # and reads stay correct
-        n = t.read(prune=("o_custkey", lo_c, lo_c + 20)).filter(
-            (F.col("o_custkey") >= lo_c) & (F.col("o_custkey") <= lo_c + 20)
-        ).count()
-        assert n == df.filter(
-            (F.col("o_custkey") >= lo_c) & (F.col("o_custkey") <= lo_c + 20)
-        ).count()
-
     def test_cdc_preimage_rows(self, spark, sf_dir, tdir):
         from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import table_changes
 
@@ -239,14 +205,14 @@ class TestFileGranularMerge:
     def test_merge_rewrites_only_overlapping_files(self, spark, sf_dir, tdir):
         t = TxnTable(spark, tdir)
         df = _orders(spark, sf_dir).repartition(8)
-        t.append(df, cluster_by=["o_orderkey"])
+        t.append(df, cluster_by="o_orderkey")
         files_before = {f.path for f in t.files()}
         lo = df.agg(F.min("o_orderkey")).first()[0]
         src = (
             df.filter(F.col("o_orderkey").between(lo, lo + 30))
             .withColumn("o_orderstatus", F.lit("U"))
         )
-        t.merge(src, ["o_orderkey"], cluster_by=["o_orderkey"], prune_col="o_orderkey")
+        t.merge(src, ["o_orderkey"], cluster_by="o_orderkey", prune_col="o_orderkey")
         files_after = {f.path for f in t.files()}
         kept = files_before & files_after
         # most files survive byte-identical (still referenced, never rewritten)
@@ -264,18 +230,53 @@ class TestFileGranularMerge:
     def test_pruned_merge_into_untouched_range_inserts(self, spark, sf_dir, tdir):
         t = TxnTable(spark, tdir)
         base = _orders(spark, sf_dir).filter(F.col("o_orderkey") < 500).repartition(4)
-        t.append(base, cluster_by=["o_orderkey"])
+        t.append(base, cluster_by="o_orderkey")
         newrows = _orders(spark, sf_dir).filter(
             (F.col("o_orderkey") >= 1000) & (F.col("o_orderkey") < 1100)
         )
         t.merge(newrows, ["o_orderkey"], prune_col="o_orderkey")
         assert t.read().count() == base.count() + newrows.count()
 
+    @staticmethod
+    def _null_ts_table(spark, tdir):
+        """41 rows clustered on a DATE ``ts`` into 4 files: keys 1-40 on
+        2025-03-(1 + k % 10), key 99 with a NULL ``ts``."""
+        rows = [(k, datetime.date(2025, 3, 1 + k % 10), "old") for k in range(1, 41)]
+        df = spark.createDataFrame(rows + [(99, None, "old")], "k long, ts date, v string")
+        t = TxnTable(spark, tdir)
+        t.append(df.repartition(4), cluster_by="ts")
+        return t
+
+    def test_pruned_merge_matches_null_prune_values(self, spark, tdir):
+        """A NULL ``prune_col`` value in the batch matches its key in a file
+        whose zone map counts NULLs, outside the batch's non-NULL range."""
+        t = self._null_ts_table(spark, tdir)
+        n_files = len(t.files())
+        src = spark.createDataFrame(
+            [(99, None, "new"), (9, datetime.date(2025, 3, 10), "new")],
+            "k long, ts date, v string")
+        t.merge(src, ["k"], prune_col="ts")
+        out = t.read()
+        assert out.count() == 41
+        assert out.filter(F.col("k") == 99).count() == 1
+        assert {r["k"] for r in out.filter(F.col("v") == "new").collect()} == {9, 99}
+        meta = t.history()[-1]["meta"]
+        assert meta["files_kept"] > 0
+        assert meta["files_kept"] + meta["files_rewritten"] == n_files
+
+    def test_pruned_merge_of_empty_batch_commits_nothing(self, spark, tdir):
+        t = self._null_ts_table(spark, tdir)
+        v, files = t.version(), {f.path for f in t.files()}
+        empty = t.read().limit(0)
+        assert t.merge(empty, ["k"], prune_col="ts") == v
+        assert t.version() == v
+        assert {f.path for f in t.files()} == files
+
     def test_zone_maps_need_no_setting(self, spark, sf_dir, tdir):
         """Any handle indexes what it writes: a table appended through one
         plain handle prunes a merge run through another."""
         orders = _orders(spark, sf_dir).withColumn("order_date", F.to_date("o_orderdate"))
-        TxnTable(spark, tdir).append(orders.repartition(8), cluster_by=["order_date"])
+        TxnTable(spark, tdir).append(orders.repartition(8), cluster_by="order_date")
         t = TxnTable(spark, tdir)
         n_files = len(t.files())
         day = orders.agg(F.min("order_date")).first()[0]
@@ -300,7 +301,7 @@ class TestFileGranularMerge:
             F.array(F.col("id")).alias("ids"),
         )
         t = TxnTable(spark, tdir)
-        t.append(df, cluster_by=["k"])
+        t.append(df, cluster_by="k")
         fs = t.files()
         assert len(fs) > 1
         assert all(set(f.stats) == {"k"} for f in fs)
@@ -328,9 +329,6 @@ class TestReadsRunNoJob:
         t, widened = _widening(spark, sf_dir, tdir)
         t.append(widened, merge_schema=True)
         self._assert_reads_run_no_job(spark, t)
-
-    def test_partition_spec_evolved_table(self, spark, sf_dir, tdir):
-        self._assert_reads_run_no_job(spark, _spec_evolved(spark, sf_dir, tdir))
 
 
 class TestSchemaEvolution:
@@ -362,154 +360,14 @@ class TestSchemaEvolution:
                      merge_schema=True)
 
 
-class TestPartitionLayout:
-    def test_partitioned_append_records_values_and_roundtrips(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(200).withColumn(
-            "status", F.col("o_orderstatus")
-        )
-        t.append(orders, partition_by=["status"])
-        assert t.partition_spec() == ["status"]
-        fs = t.files()
-        assert all(f.partition_values and "status" in f.partition_values for f in fs)
-        got = t.read()
-        # partition column is re-attached from log metadata with its type
-        assert got.schema["status"].dataType.simpleString() == "string"
-        assert got.count() == 200
-        assert (
-            got.groupBy("status").count().orderBy("status").collect()
-            == orders.groupBy("status").count().orderBy("status").collect()
-        )
-
-    def test_partition_pruning_exact(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(500).withColumn(
-            "status", F.col("o_orderstatus")
-        )
-        t.append(orders, partition_by=["status"])
-        all_files = t.files()
-        pruned = t.files(prune=("status", "F", "F"))
-        assert 0 < len(pruned) < len(all_files)
-        assert all(f.partition_values["status"] == "F" for f in pruned)
-        got = t.read(prune=("status", "F", "F"))
-        assert got.count() == orders.filter(F.col("status") == "F").count()
-
-    def test_partition_spec_evolution_mixed_read(self, spark, sf_dir, tdir):
-        """Iceberg-style spec evolution: commit 0 unpartitioned, commit 1
-        partitioned; old files keep their layout, reads union both, and the
-        implicit spec applies to later appends that don't re-declare it."""
-        t = _spec_evolved(spark, sf_dir, tdir)
-        assert t.partition_spec(version=0) == []
-        assert t.partition_spec() == ["status"]
-        spec_of = {f.path: f.partition_values for f in t.files()}
-        assert any(v is None for v in spec_of.values())        # old layout
-        assert any(v is not None for v in spec_of.values())    # new layout
-        assert t.read().count() == 300
-        # pruning still prunes new-layout files and keeps old (no metadata)
-        pruned = {f.path for f in t.files(prune=("status", "F", "F"))}
-        for path, pv in spec_of.items():
-            if pv is None:
-                assert path in pruned  # unprunable -> must read
-            elif pv["status"] != "F":
-                assert path not in pruned
-
-    def test_partitioned_merge_preserves_layout(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(100).withColumn(
-            "status", F.col("o_orderstatus")
-        )
-        t.append(orders, partition_by=["status"])
-        delta = orders.limit(10).withColumn("o_totalprice", F.lit(0.0))
-        t.merge(delta, keys=["o_orderkey"])
-        assert t.read().count() == 100
-        assert t.read().filter(F.col("o_totalprice") == 0.0).count() == 10
-        # rewrite kept hive layout: every live file still has partition values
-        assert all(f.partition_values is not None for f in t.files())
-
-
-class TestBucketLayout:
-    def test_bucketed_append_records_bucket_ids(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(400)
-        t.append(orders, bucket_by={"col": "o_orderkey", "n": 8})
-        assert t.bucket_spec() == {"col": "o_orderkey", "n": 8}
-        fs = t.files()
-        assert {f.bucket for f in fs} <= set(range(8))
-        assert len(fs) > 1
-        assert t.read().count() == 400
-
-    def test_bucket_ids_match_spark_hash_partitioning(self, spark, sf_dir, tdir):
-        """File bucket id == pmod(murmur3(key), n) for every row it holds —
-        the invariant bucket-pruned merge relies on."""
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(400)
-        n = 8
-        t.append(orders, bucket_by={"col": "o_orderkey", "n": n})
-        for f in t.files():
-            df = spark.read.parquet(os.path.join(t.path, f.path))
-            ids = {
-                r[0]
-                for r in df.select(
-                    F.pmod(F.hash(F.col("o_orderkey")), F.lit(n))
-                ).distinct().collect()
-            }
-            assert ids <= {f.bucket}
-
-    def test_bucket_pruned_merge_rewrites_only_touched_buckets(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(1000)
-        t.append(orders, bucket_by={"col": "o_orderkey", "n": 8})
-        n_files = len(t.files())
-        keys = [r[0] for r in orders.select("o_orderkey").limit(3).collect()]
-        delta = orders.filter(F.col("o_orderkey").isin(keys)).withColumn(
-            "o_totalprice", F.lit(-1.0)
-        )
-        t.merge(delta, keys=["o_orderkey"])
-        meta = t.history()[-1]["meta"]
-        assert meta["files_rewritten"] < n_files
-        assert meta["files_kept"] > 0
-        got = t.read()
-        assert got.count() == 1000
-        assert got.filter(F.col("o_totalprice") == -1.0).count() == 3
-        # result identical to an unpruned merge on a twin table
-        assert t.read().filter(F.col("o_orderkey").isin(keys)).count() == 3
-
-    def test_pre_bucket_files_always_rewritten(self, spark, sf_dir, tdir):
-        """Files from before the bucket spec have no bucket metadata and must
-        be included in every bucket-pruned merge."""
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(200)
-        a = orders.filter(F.col("o_orderkey") % 2 == 0)
-        b = orders.filter(F.col("o_orderkey") % 2 == 1)
-        t.append(a)                                        # unbucketed
-        t.append(b, bucket_by={"col": "o_orderkey", "n": 4})
-        one = orders.limit(1).withColumn("o_totalprice", F.lit(-2.0))
-        t.merge(one, keys=["o_orderkey"])
-        got = t.read()
-        assert got.count() == 200
-        assert got.filter(F.col("o_totalprice") == -2.0).count() == 1
-
-    def test_compact_preserves_bucket_layout(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(300)
-        t.append(orders, bucket_by={"col": "o_orderkey", "n": 4})
-        t.append(orders.limit(0), bucket_by={"col": "o_orderkey", "n": 4})
-        t.compact()
-        fs = t.files()
-        assert all(f.bucket is not None for f in fs)
-        assert t.read().count() == 300
-        assert t.bucket_spec() == {"col": "o_orderkey", "n": 4}
-
-
 class TestMetadataViews:
     def test_files_df_and_history_df(self, spark, sf_dir, tdir):
         t = TxnTable(spark, tdir)
         orders = _orders(spark, sf_dir).limit(100)
-        t.append(orders, bucket_by={"col": "o_orderkey", "n": 4})
+        t.append(orders)
         t.merge(orders.limit(5).withColumn("o_totalprice", F.lit(0.0)), ["o_orderkey"])
         fdf = t.files_df()
         assert fdf.agg(F.sum("rows")).first()[0] == 100
-        assert fdf.filter(F.col("bucket").isNull()).count() == 0
         assert fdf.filter(F.col("stats").contains("o_orderkey")).count() == fdf.count()
         hdf = t.history_df()
         assert [r["op"] for r in hdf.orderBy("version").collect()] == ["append", "merge"]
@@ -531,21 +389,25 @@ class TestMetadataViews:
         assert t.read().count() == 800
 
     def test_specs_survive_log_checkpoint(self, spark, sf_dir, tdir, monkeypatch):
-        """Partition/bucket specs live in commit props; snapshot replay that
-        starts from a checkpoint must still see them."""
+        """CHECK constraints live in commit props; snapshot replay that
+        starts from a checkpoint must still see and enforce them."""
+        from etl_mssql_to_postgres_dailysync_spark.sources.txn_table import (
+            ConstraintViolation,
+        )
         monkeypatch.setattr(txn_table, "CHECKPOINT_INTERVAL", 5)
         t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(40).withColumn(
-            "status", F.col("o_orderstatus")
-        )
-        t.append(orders, partition_by=["status"])
+        orders = _orders(spark, sf_dir).limit(40)
+        t.append(orders)
+        t.set_check("price_pos", "o_totalprice > 0")
         for _ in range(7):  # crosses the interval-5 checkpoint
             t.append(orders.limit(5))
         assert os.path.exists(_version_path(t.log, 5, checkpoint=True))
-        assert t.partition_spec() == ["status"]
+        assert t.checks() == {"price_pos": "o_totalprice > 0"}
         assert t.read().count() == 40 + 35
-        # partition column still reconstructed for checkpoint-era files
-        assert t.read().filter(F.col("status").isNull()).count() == 0
+        v = t.version()
+        with pytest.raises(ConstraintViolation, match="price_pos"):
+            t.append(orders.limit(5).withColumn("o_totalprice", F.lit(-1.0)))
+        assert t.version() == v
 
 
 class TestTimestampTravel:
@@ -571,7 +433,7 @@ class TestDelete:
         t = TxnTable(spark, tdir)
         orders = _orders(spark, sf_dir).limit(1000)
         # cluster so the delete range concentrates in few files
-        t.append(orders, cluster_by=["o_orderkey"])
+        t.append(orders, cluster_by="o_orderkey")
         n_files = len(t.files())
         keys = [r[0] for r in orders.orderBy("o_orderkey").limit(5).collect()]
         v = t.delete(F.col("o_orderkey").isin(keys))
@@ -592,24 +454,11 @@ class TestDelete:
         assert t.delete(F.col("o_orderkey") < 0) == v
         assert t.version() == v
 
-    def test_delete_preserves_partition_layout(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(200).withColumn(
-            "status", F.col("o_orderstatus")
-        )
-        t.append(orders, partition_by=["status"])
-        t.delete(F.col("status") == "F")
-        got = t.read()
-        assert got.filter(F.col("status") == "F").count() == 0
-        assert got.count() == orders.filter(F.col("status") != "F").count()
-        assert all(f.partition_values is not None for f in t.files())
-
-
 class TestUpdate:
     def test_update_is_file_granular_and_type_stable(self, spark, sf_dir, tdir):
         t = TxnTable(spark, tdir)
         orders = _orders(spark, sf_dir).limit(1000)
-        t.append(orders, cluster_by=["o_orderkey"])
+        t.append(orders, cluster_by="o_orderkey")
         n_files = len(t.files())
         keys = [r[0] for r in orders.orderBy("o_orderkey").limit(5).collect()]
         t.update(F.col("o_orderkey").isin(keys),
@@ -657,17 +506,6 @@ class TestRestore:
         # restoring a restore works
         t.restore(2)
         assert t.read().count() == 0
-
-    def test_restore_resets_partition_spec(self, spark, sf_dir, tdir):
-        t = TxnTable(spark, tdir)
-        orders = _orders(spark, sf_dir).limit(200).withColumn(
-            "status", F.col("o_orderstatus"))
-        t.append(orders, partition_by=["status"])   # v0: partitioned
-        t.overwrite(orders.drop("status"), partition_by=[])  # v1: spec dropped
-        assert t.partition_spec() == []
-        t.restore(0)
-        assert t.partition_spec() == ["status"]
-        assert t.read().count() == 200
 
     def test_restore_after_vacuum_raises(self, spark, sf_dir, tdir):
         t = TxnTable(spark, tdir)
