@@ -22,7 +22,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_mssql_to_postgres_dailysync_spark.functions.hashing import md5_long
+from etl_mssql_to_postgres_dailysync_spark.functions.hashing import bit_positions, md5_long, pow2
 from etl_mssql_to_postgres_dailysync_spark.functions.text import normalize, tokens
 
 SIMHASH_BITS = 60  # md5_long yields 60-bit positive values
@@ -468,8 +468,12 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
     """SimHash fingerprint: per-token 60-bit hashes vote ±1 per bit position;
     the sign vector packs back into a bigint. Ordered fold -> deterministic.
 
-    Bit positions are unrolled statically (``F.shiftright`` takes only int
-    literals); the per-token md5 is computed once via ``transform``."""
+    Bit positions are one lambda over ``bit_positions(bits)``, so the
+    expression has the same size for any ``bits``. The per-token md5 is
+    computed once via ``transform``, and the votes are one fold over those
+    hashes (Catalyst does not share subexpressions inside lambdas, so a fold
+    per bit would recompute md5 ``bits`` times)."""
+    js = bit_positions(bits)
     toks = F.array_distinct(tokens(normalize(text)))
     hashes = F.transform(toks, lambda t: md5_long(t))
     # counts[j] = sum over tokens of (bit j set ? +1 : -1)
@@ -478,18 +482,15 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
         F.array_repeat(F.lit(0).cast("long"), bits),
         lambda acc, h: F.zip_with(
             acc,
-            F.array(
-                *[F.shiftright(h, j).bitwiseAND(F.lit(1)).cast("long") for j in range(bits)]
-            ),
+            F.transform(js, lambda j: F.call_function("shiftright", h, j).bitwiseAND(F.lit(1))),
             lambda a, bit: a + F.when(bit == 1, F.lit(1)).otherwise(F.lit(-1)),
         ),
     )
-    # pack sign bits: zip counts with the literal powers-of-two array
-    powers = F.array(*[F.lit(1 << j).cast("long") for j in range(bits)])
+    # pack sign bits: bit j contributes 1 << j when its count is positive
     return F.aggregate(
         F.zip_with(
-            counts, powers,
-            lambda cnt, p: F.when(cnt > 0, p).otherwise(F.lit(0).cast("long")),
+            counts, js,
+            lambda cnt, j: F.when(cnt > 0, pow2(j)).otherwise(F.lit(0).cast("long")),
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,

@@ -27,6 +27,19 @@ def md5_long(col: Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(s), 1, HEX_CHARS), 16, 10).cast("bigint")
 
 
+def bit_positions(bits: int) -> Column:
+    """array<int> ``[0, 1, ..., bits-1]``: the domain of a per-bit lambda.
+    One lambda over it replaces ``bits`` separately built columns, each of
+    which costs several py4j round trips to build."""
+    return F.sequence(F.lit(0), F.lit(bits - 1))
+
+
+def pow2(j: Column) -> Column:
+    """``1 << j`` as a bigint for a column ``j``, such as a lambda variable
+    (``F.shiftleft`` takes only an int literal shift)."""
+    return F.call_function("shiftleft", F.lit(1).cast("long"), j)
+
+
 def md5_long_sql(expr: str, seed: int | None = None, hex_chars: int = HEX_CHARS) -> str:
     """The DuckDB-SQL twin of :func:`md5_long`, for oracle strings."""
     inner = f"({expr}) || '#{seed}'" if seed is not None else f"({expr})"

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_mssql_to_postgres_dailysync_spark.functions.hashing import bit_positions, pow2
 from etl_mssql_to_postgres_dailysync_spark.functions.vectors import (
     cosine_prenormed,
     norm,
@@ -189,17 +190,33 @@ def ivf_topk(
 def sign_bucket(vec, bits: int = 6):
     """LSH bucket id from the signs of the first ``bits`` dimensions:
     bucket = sum_j 2^j * [v[j] > 0]. Cheap, deterministic, oracle-friendly.
-    Statically unrolled (bit positions are Python ints)."""
-    terms = [
-        F.when(F.element_at(vec, j + 1) > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for j in range(bits)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+    A missing dimension (``vec`` shorter than ``bits``, or NULL) counts as
+    not positive."""
+    signs = _per_bit(
+        vec, bits, lambda j, v: F.when(v > 0, pow2(j)).otherwise(F.lit(0).cast("long"))
+    )
+    return F.coalesce(
+        F.aggregate(signs, F.lit(0).cast("long"), lambda acc, x: acc + x),
+        F.lit(0).cast("long"),
+    )
+
+
+def sign_margins(vec, bits: int = 6):
+    """Per-bit integer margins of ``sign_bucket``: array<long>
+    ``|round(v[j] * QUANT_SCALE)|`` for j < ``bits``. The array is always
+    ``bits`` long; a dimension past the end of ``vec`` is NULL."""
+    return _per_bit(
+        vec, bits, lambda j, v: F.abs(F.round(v.cast("double") * QUANT_SCALE).cast("long"))
+    )
+
+
+def _per_bit(vec, bits: int, f):
+    """``[f(j, vec[j]) for j < bits]`` as one lambda, ``bits`` long, with
+    ``vec[j]`` NULL past the end of ``vec``. The lambda sees only its own
+    variables: Catalyst's constraint inference can move a lambda that reads
+    a column from outside into a filter on the other side of a join, where
+    that column does not exist (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)."""
+    return F.zip_with(bit_positions(bits), F.slice(vec, 1, bits), f)
 
 
 def _heap_probe_masks(margins: list[int], T: int) -> list[int]:
@@ -301,17 +318,12 @@ def lsh_bucketed_topk(
     multiprobe at bits=6 and 100% scan for brute force)."""
     bucket = sign_bucket(F.col(vec_col), bits)
     if margin_probes is not None:
-        margins = F.array(*[
-            F.abs(F.round(F.element_at(F.col(vec_col), j + 1).cast("double")
-                          * QUANT_SCALE).cast("long"))
-            for j in range(bits)
-        ])
         q0 = queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
             norm(F.col(vec_col)).alias("qn"),
             bucket.alias("__b0__"),
-            margins.alias("__marg__"),
+            sign_margins(F.col(vec_col), bits).alias("__marg__"),
         )
         q = (
             q0.withColumn(

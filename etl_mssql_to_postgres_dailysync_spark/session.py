@@ -49,6 +49,15 @@ def get_spark(
         skew splitting replace hand-tuned chunk sizes
         (MSSQL_EXTRACT_CHUNKSIZE etc. in the reference).
       - Arrow on: any Pandas-UDF path is batch-vectorized.
+      - ``spark.python.sql.dataFrameDebugging.enabled=false``: building a
+        plan stops paying for call-site capture. With it on, every
+        ``pyspark.sql.functions`` call walks the Python stack and adds a
+        conf lookup and a set/clear pair of JVM round trips. The trade-off:
+        an analysis error no longer names the Python line that built the
+        failing expression. To get the line back while debugging, pass
+        ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+        to the first ``get_spark`` call of the process (PySpark reads the
+        flag once per process, at the first ``functions`` call).
     """
     cpus = local_cpus()
     if master is None:
@@ -70,6 +79,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark only reads
         # nanos as long — plans.driver_queries._t converts back to micros
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
