@@ -14,30 +14,19 @@ Reference semantics covered:
     dags/__pycache__/mssql_to_postgres_sync.cpython-38.pyc)
   - composite conflict keys (4-column, same pyc)
 
-Implemented as declarative DataFrame join rewrites so Catalyst/AQE pick the
-physical join (broadcast / shuffled-hash / sort-merge, skew-split). Two
-strategies:
+Implemented as one declarative plan: a full-outer join on the keys and a
+per-column CASE that resolves each joined row to insert, update or keep.
+Catalyst/AQE pick the physical join (shuffled-hash or sort-merge,
+skew-split): one shuffle of each side on the key columns. A broadcast
+variant (target LEFT JOIN broadcast(source) plus an anti-join for the
+inserts) was measured and removed: it was slower at every delta of 1% or
+more of the target (MICROBENCH.md), and on the daily sync, a ~1% delta,
+``perfbench/run.py --workload daily_sync`` ran op_p50 1.70-1.79 s with it
+against 1.42-1.53 s with this plan (4 vCPU, three seeds).
 
-  ``full_outer`` (default): one full-outer join on the keys, per-column
-  CASE resolution. One shuffle of each side on the key columns — the right
-  plan when source and target are comparable in size.
-
-  ``small_source``: for the 100 TB case — a huge target and a small daily
-  delta. Full-outer joins cannot broadcast either side, so instead:
-      updated = target LEFT JOIN broadcast(source)   -- map-side, NO shuffle
-                                                     -- of the big target
-      inserts = source LEFT ANTI JOIN target.select(keys)
-                                                     -- shuffles only the
-                                                     -- target's key columns
-      merged  = updated UNION inserts
-  The big fact table's full rows never cross the network; only its key
-  columns do (column-pruned by Catalyst). Combined with a date-partitioned
-  target (rewrite only affected partitions, see plans/daily_sync.py) this is
-  the scalable upsert. Measured (tools/microbench_merge.py, sf0.1 600k-row
-  target, local[32]): the strategies are within noise of each other locally
-  at every delta ratio — the point of small_source is shuffle BYTES (the
-  target's full rows never cross the network), which only matters once the
-  network is real; pick it whenever |delta| << |target|, not for local CPU.
+At scale the target side of the join is bounded by file pruning, not by a
+broadcast: ``TxnTable.merge(prune_col=)`` reads and rewrites only the files
+whose zone maps overlap the batch, so a daily delta joins one day's files.
 
 Intra-batch duplicate keys are resolved *last-wins* before merging (the
 reference's DB-side upsert is per-statement; SURVEY.md §7 defines last-wins),
@@ -127,7 +116,6 @@ def merge(
     exclude_update_cols: Sequence[str] = (),
     matched_condition: MatchedCondition | None = None,
     source_order_col: str | None = None,
-    strategy: str = "full_outer",
     insert_only: bool = False,
 ) -> MergeResult:
     """Relational MERGE: returns the post-merge state of ``target``.
@@ -140,8 +128,12 @@ def merge(
             last-writer-wins by version timestamp). Rows matching the key but
             failing the guard keep ALL target values.
         source_order_col: version column for intra-batch last-wins dedupe.
-        strategy: ``full_outer`` | ``small_source`` (see module docstring).
         insert_only: WHEN NOT MATCHED THEN INSERT only (no updates).
+
+    A row whose key holds a NULL matches nothing, as in SQL MERGE: a source
+    one is inserted, a target one is kept unchanged. The intra-batch dedupe
+    still groups NULL keys as equal, so of several NULL-key source rows with
+    the same key values only one is inserted.
     """
     keys = list(keys)
     non_keys = [c for c in target.columns if c not in keys]
@@ -152,80 +144,34 @@ def merge(
     source = dedupe_last_wins(source, keys, source_order_col)
     updatable = set() if insert_only else set(non_keys) - set(exclude_update_cols)
 
-    t = target.alias("__t__")
-    s = source.alias("__s__")
+    # A literal marker on each side says which side a joined row came from;
+    # a key column cannot, since a NULL key reads the same as a missing row.
+    t = target.withColumn("__present__", F.lit(True)).alias("__t__")
+    s = source.withColumn("__present__", F.lit(True)).alias("__s__")
     tc: ColAccessor = lambda c: F.col(f"__t__.{c}")
     sc: ColAccessor = lambda c: F.col(f"__s__.{c}")
 
-    # Existence markers survive the outer join even when every data column is
-    # NULL (keys are assumed non-NULL: the reference drops NULL-key rows
-    # pre-merge, csv_to_mssqldb.py:350-356 — see filters.drop_null_keys).
-    guard = matched_condition(sc, tc) if matched_condition is not None else F.lit(True)
-
-    if strategy == "small_source":
-        mr = _merge_small_source(t, s, tc, sc, keys, non_keys, updatable, guard)
-    else:
-        mr = _merge_full_outer(t, s, tc, sc, keys, non_keys, updatable, guard)
-    return mr
-
-
-def _resolved_columns(tc, sc, keys, non_keys, updatable, matched, guard):
-    """Per-column CASE resolution for rows of the joined relation."""
-    do_update = matched & guard if updatable else F.lit(False)
-    cols = [F.coalesce(tc(k), sc(k)).alias(k) for k in keys]
-    for c in non_keys:
-        if c in updatable:
-            col = (
-                F.when(~matched & tc(keys[0]).isNull(), sc(c))  # insert branch
-                .when(do_update, sc(c))
-                .otherwise(tc(c))
-            )
-        else:
-            col = F.when(~matched & tc(keys[0]).isNull(), sc(c)).otherwise(tc(c))
-        cols.append(col.alias(c))
-    action = (
-        F.when(~matched & tc(keys[0]).isNull(), F.lit("insert"))
-        .when(do_update, F.lit("update"))
-        .otherwise(F.lit("keep"))
-        .alias("__merge_action__")
-    )
-    return cols, action
-
-
-def _merge_full_outer(t, s, tc, sc, keys, non_keys, updatable, guard):
     cond = None
     for k in keys:
         eq = tc(k) == sc(k)
         cond = eq if cond is None else (cond & eq)
-    # Null-out nothing: full outer keeps unmatched rows of both sides.
     joined = t.join(s, on=cond, how="full_outer")
-    matched = tc(keys[0]).isNotNull() & sc(keys[0]).isNotNull()
-    cols, action = _resolved_columns(tc, sc, keys, non_keys, updatable, matched, guard)
+
+    insert = tc("__present__").isNull()
+    matched = tc("__present__").isNotNull() & sc("__present__").isNotNull()
+    guard = matched_condition(sc, tc) if matched_condition is not None else F.lit(True)
+    do_update = matched & guard if updatable else F.lit(False)
+    cols = [F.coalesce(tc(k), sc(k)).alias(k) for k in keys]
+    for c in non_keys:
+        col = F.when(insert, sc(c))
+        if c in updatable:
+            col = col.when(do_update, sc(c))
+        cols.append(col.otherwise(tc(c)).alias(c))
+    action = (
+        F.when(insert, F.lit("insert"))
+        .when(do_update, F.lit("update"))
+        .otherwise(F.lit("keep"))
+        .alias("__merge_action__")
+    )
     with_markers = joined.select(*cols, action)
     return MergeResult(df=with_markers.drop("__merge_action__"), _with_markers=with_markers)
-
-
-def _merge_small_source(t, s, tc, sc, keys, non_keys, updatable, guard):
-    # updated side: big target stays in place, small source broadcast.
-    joined = t.join(F.broadcast(s), on=[tc(k) == sc(k) for k in keys], how="left")
-    matched = sc(keys[0]).isNotNull()
-    do_update = matched & guard if updatable else F.lit(False)
-    upd_cols = [tc(k).alias(k) for k in keys]
-    for c in non_keys:
-        if c in updatable:
-            upd_cols.append(F.when(do_update, sc(c)).otherwise(tc(c)).alias(c))
-        else:
-            upd_cols.append(tc(c).alias(c))
-    upd_action = F.when(do_update, F.lit("update")).otherwise(F.lit("keep")).alias("__merge_action__")
-    updated = joined.select(*upd_cols, upd_action)
-
-    # insert side: only the target's KEY columns shuffle (column-pruned scan).
-    target_keys = t.select(*[tc(k).alias(k) for k in keys])
-    inserts = (
-        s.join(target_keys, on=keys, how="left_anti")
-        .select(*[F.col(c) for c in [*keys, *non_keys]])
-        .withColumn("__merge_action__", F.lit("insert"))
-    )
-    with_markers = updated.unionByName(inserts)
-    return MergeResult(df=with_markers.drop("__merge_action__"), _with_markers=with_markers)
-

@@ -22,9 +22,9 @@ millions of independent short per-key series, never a data-grain global
 window (the plan-sweep gate enforces this shape repo-wide). One shuffle on
 the key, reused by all three window steps because they share the same
 partitioning. At 100 TB the feed is date-partitioned; the daily increment
-joins yesterday's open rows (is_current) against today's events — the same
-small_source merge posture as operators/merge.py — so the full history is
-never rewritten.
+joins yesterday's open rows (is_current) against today's events — as a
+pruned ``TxnTable.merge`` joins only the files a day touches — so the full
+history is never rewritten.
 """
 
 from __future__ import annotations

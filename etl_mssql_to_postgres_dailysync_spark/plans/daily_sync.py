@@ -15,8 +15,9 @@ blocks until the first action over each returned DataFrame has run, and that
 action must consume the DataFrame fully (a write or a count, not ``first``).
 
 Scale: the date predicate reaches the source scan (JDBC pushdown or parquet
-row-group pruning); the merge uses the ``small_source`` strategy because a
-daily delta is tiny relative to the accumulated target.
+row-group pruning); the merge is the one full-outer join plan of
+``operators/merge.py``, and a committing caller bounds its target side with
+``TxnTable.merge(prune_col=)``, which reads only the files the day may touch.
 """
 
 from __future__ import annotations
@@ -87,7 +88,7 @@ def daily_sync(
     )
 
     complete = filters.drop_null_keys(complete, keys)
-    merged, counts = merge_op(target, complete, keys, strategy="small_source").observed()
+    merged, counts = merge_op(target, complete, keys).observed()
     return DailySyncResult(merged, incomplete, extracted, counts, quarantined)
 
 

@@ -407,10 +407,13 @@ class TxnTable:
         publish atomically.  A table with no commits is an empty target of
         the source's schema, so the first merge dedupes like every later one.
 
+        One tiny aggregation takes the batch's row count first: an empty
+        batch commits nothing and returns the head version.
+
         With ``prune_col`` (an integer, floating-point, date or
         timestamp-without-time-zone column, the types every file has zone
-        maps for), the rewrite is FILE-GRANULAR: one tiny aggregation takes
-        the batch's row count, NULL count and [min, max] on that column, and
+        maps for), the same aggregation also takes the batch's NULL count
+        and [min, max] on that column, and the rewrite is FILE-GRANULAR:
         only the target files that may hold a matching row are rewritten —
         those whose zone maps overlap [min, max], those whose zone maps count
         NULLs when the batch has a NULL, and those with no zone map.
@@ -418,20 +421,22 @@ class TxnTable:
         merge-on-read-competitive path.  A daily delta against a table
         clustered by date rewrites one day's files, not the table.  This
         holds when a key's ``prune_col`` value never changes, as an event
-        timestamp does not.  An empty batch commits nothing and returns the
-        head version.  Without ``prune_col``, the whole live set rewrites."""
+        timestamp does not.  Without ``prune_col``, the whole live set
+        rewrites."""
         from etl_mssql_to_postgres_dailysync_spark.operators.merge import merge as rel_merge
 
         snap = snapshot(self.path)
         live = snap.live
-        touched = list(live)
+        bounds = [F.count(F.lit(1)).alias("n")]
         if prune_col is not None:
             c = F.col(prune_col)
-            b = source.agg(F.count(F.lit(1)).alias("n"),
-                           F.count_if(c.isNull()).alias("nulls"),
-                           F.min(c).alias("lo"), F.max(c).alias("hi")).first()
-            if not b["n"]:
-                return snap.version
+            bounds += [F.count_if(c.isNull()).alias("nulls"),
+                       F.min(c).alias("lo"), F.max(c).alias("hi")]
+        b = source.agg(*bounds).first()
+        if not b["n"]:
+            return snap.version
+        touched = list(live)
+        if prune_col is not None:
             lo, hi = _json_safe(b["lo"]), _json_safe(b["hi"])
             # a file with no zone map on prune_col may hold anything, NULLs too
             touched = [

@@ -181,7 +181,6 @@ def txn_merge_sink(
                 if done:
                     quarantine.delete(F.struct(*keys).isin(
                         [F.struct(*[F.lit(r[k]).alias(k) for k in keys]) for r in done]))
-            if not incomplete.isEmpty():
-                quarantine.merge(incomplete, keys)
+            quarantine.merge(incomplete, keys)
 
     return apply_batch

@@ -1,6 +1,6 @@
 """Merge family tests — the scenario fixtures from FIXTURES.md §4:
 idempotency, column masks, composite keys, matched-condition, intra-batch
-last-wins, both physical strategies."""
+last-wins, NULL keys."""
 
 import datetime as dt
 
@@ -29,6 +29,16 @@ def target(spark):
     )
 
 
+# How the caller hands the source over: as given ("full_outer"), or
+# broadcast-hinted as a small daily delta ("small_source"). merge() plans
+# both as the one full-outer join and must return the same rows.
+SOURCE_SHAPES = ["full_outer", "small_source"]
+
+
+def _shaped(source, shape):
+    return F.broadcast(source) if shape == "small_source" else source
+
+
 @pytest.fixture()
 def source(spark):
     return spark.createDataFrame(
@@ -39,9 +49,9 @@ def source(spark):
     )
 
 
-@pytest.mark.parametrize("strategy", ["full_outer", "small_source"])
-def test_plain_upsert(target, source, strategy):
-    out = merge(target, source, ["k"], strategy=strategy)
+@pytest.mark.parametrize("shape", SOURCE_SHAPES)
+def test_plain_upsert(target, source, shape):
+    out = merge(target, _shaped(source, shape), ["k"])
     assert _rows(out.df) == {
         (1, "t1", dt.datetime(2025, 1, 1)),
         (2, "s2", dt.datetime(2025, 2, 2)),
@@ -56,24 +66,25 @@ def test_plain_upsert(target, source, strategy):
     assert obs.get == counts
 
 
-@pytest.mark.parametrize("strategy", ["full_outer", "small_source"])
-def test_idempotent_double_merge(target, source, strategy):
-    once = merge(target, source, ["k"], strategy=strategy).df
-    twice = merge(once, source, ["k"], strategy=strategy).df
+@pytest.mark.parametrize("shape", SOURCE_SHAPES)
+def test_idempotent_double_merge(target, source, shape):
+    source = _shaped(source, shape)
+    once = merge(target, source, ["k"]).df
+    twice = merge(once, source, ["k"]).df
     assert _rows(once) == _rows(twice)
 
 
-@pytest.mark.parametrize("strategy", ["full_outer", "small_source"])
-def test_column_mask_first_write_wins(target, source, strategy):
+@pytest.mark.parametrize("shape", SOURCE_SHAPES)
+def test_column_mask_first_write_wins(target, source, shape):
     # S8: ts excluded from UPDATE SET -> original ts kept on re-merge
-    out = merge(target, source, ["k"], exclude_update_cols=["ts"], strategy=strategy).df
+    out = merge(target, _shaped(source, shape), ["k"], exclude_update_cols=["ts"]).df
     got = {r["k"]: (r["v"], r["ts"]) for r in out.collect()}
     assert got[2] == ("s2", dt.datetime(2025, 1, 2))  # v updated, ts preserved
     assert got[4] == ("s4", dt.datetime(2025, 2, 4))  # inserts take source ts
 
 
-@pytest.mark.parametrize("strategy", ["full_outer", "small_source"])
-def test_matched_condition_last_writer_wins(spark, strategy):
+@pytest.mark.parametrize("shape", SOURCE_SHAPES)
+def test_matched_condition_last_writer_wins(spark, shape):
     # S7: update only when source version is newer (or target version NULL)
     target = spark.createDataFrame(
         [
@@ -91,13 +102,24 @@ def test_matched_condition_last_writer_wins(spark, strategy):
     )
     out = merge(
         target,
-        source,
+        _shaped(source, shape),
         ["k"],
         matched_condition=lambda s, t: t("ver").isNull() | (s("ver") > t("ver")),
-        strategy=strategy,
     ).df
     got = {r["k"]: r["v"] for r in out.collect()}
     assert got == {1: "t1", 2: "s2", 3: "s3"}
+
+
+def test_null_keys_match_nothing(spark):
+    """As in SQL MERGE, a NULL key equals no key: the NULL-key target row is
+    kept unchanged and the NULL-key source row is inserted."""
+    target = spark.createDataFrame([(1, "t1"), (None, "tnull"), (3, "t3")], "k long, v string")
+    source = spark.createDataFrame([(1, "s1"), (None, "snull"), (4, "s4")], "k long, v string")
+    out = merge(target, source, ["k"])
+    assert _rows(out.df) == {(1, "s1"), (3, "t3"), (4, "s4"), (None, "snull"), (None, "tnull")}
+    assert out.counts_df().first().asDict() == {
+        "total": 5, "updated": 1, "inserted": 2, "kept": 2,
+    }
 
 
 def test_composite_keys(spark):
@@ -164,7 +186,6 @@ def test_transactions_sync_variant_contract(spark):
         matched_condition=lambda s, t: t("UpdatedDateUtc").isNull()
         | (s("UpdatedDateUtc") > t("UpdatedDateUtc")),
         source_order_col="UpdatedDateUtc",
-        strategy="small_source",
     ).df
     got = {(r["TxCorrelationId"], r["TenantId"]): r["TxBaseAmount"] for r in out.collect()}
     assert got == {(100, 1): 10.0, (100, 2): 22.0, (101, 1): 33.0, (102, 1): 44.0}

@@ -66,16 +66,6 @@ def test_groupby_does_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 2, plan
 
 
-def test_merge_small_source_never_shuffles_target_rows(spark, orders):
-    source = orders.limit(10)
-    mr = merge(orders, source, ["o_orderkey"], strategy="small_source")
-    plan = plan_of(mr.df)
-    # update branch: broadcast join against the small delta
-    assert "BroadcastHashJoin" in plan, plan
-    # insert branch: anti join — and the target side of it scans keys only
-    assert "LeftAnti" in plan, plan
-
-
 def test_merge_full_outer_single_shuffle_each_side(spark, orders):
     source = orders.limit(100)
     mr = merge(orders, source, ["o_orderkey"])

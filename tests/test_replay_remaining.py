@@ -151,7 +151,7 @@ def _assert_order_rows(got_rows, want: dict[int, tuple], date_col=4):
 def test_merge_upsert_python_replay(spark, sfd):
     """Dict-merge third implementation: source wins on matched keys,
     unmatched source inserts, unmatched target keeps. merge_small_source
-    must produce the identical state via the broadcast strategy."""
+    plans like merge_upsert and must produce the identical state."""
     target, source = _merge_model(sfd)
     want = dict(target)
     want.update(source)

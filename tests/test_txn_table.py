@@ -272,6 +272,13 @@ class TestFileGranularMerge:
         assert t.version() == v
         assert {f.path for f in t.files()} == files
 
+    def test_unpruned_merge_of_empty_batch_commits_nothing(self, spark, tdir):
+        t = self._null_ts_table(spark, tdir)
+        v, files = t.version(), {f.path for f in t.files()}
+        assert t.merge(t.read().limit(0), ["k"]) == v
+        assert t.version() == v
+        assert {f.path for f in t.files()} == files
+
     def test_zone_maps_need_no_setting(self, spark, sf_dir, tdir):
         """Any handle indexes what it writes: a table appended through one
         plain handle prunes a merge run through another."""
