@@ -246,13 +246,20 @@ def lsh_band_rows(
     (:func:`incremental_lsh_dedup`), or maintain it incrementally from a CDC
     stream (``extra_cols=("_sign",)`` carries the retraction sign through —
     the expression pipeline is streaming-safe)."""
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
     sigs = df.select(
         F.col(id_col).alias("doc"),
         *[F.col(c) for c in extra_cols],
         minhash_signature_arrow(F.col(text_col), num_hashes, k).alias("sigs"),
     )
+    return _banded(sigs, num_hashes, bands, ("doc", *extra_cols))
+
+
+def _banded(sigs: DataFrame, num_hashes: int, bands: int, keep: tuple[str, ...]) -> DataFrame:
+    """``(*keep, band, band_hash)`` rows: the ``sigs`` signature array cut
+    into ``bands`` bands of ``num_hashes / bands`` positions, each band's
+    values md5-hashed with seed ``1000 + band``, in one explode."""
+    assert num_hashes % bands == 0
+    rows_per_band = num_hashes // bands
     band_structs = []
     for b in range(bands):
         parts = [
@@ -261,11 +268,8 @@ def lsh_band_rows(
         ]
         bh = md5_long(F.concat_ws("|", *parts), seed=1000 + b)
         band_structs.append(F.struct(F.lit(b).alias("band"), bh.alias("band_hash")))
-    return sigs.select(
-        "doc", *extra_cols, F.explode(F.array(*band_structs)).alias("bx")
-    ).select(
-        "doc", *extra_cols,
-        F.col("bx.band").alias("band"), F.col("bx.band_hash").alias("band_hash"),
+    return sigs.select(*keep, F.explode(F.array(*band_structs)).alias("bx")).select(
+        *keep, F.col("bx.band").alias("band"), F.col("bx.band_hash").alias("band_hash"),
     )
 
 
@@ -323,25 +327,11 @@ def minhash_estimate_pairs(
     generation adds no second corpus scan. Output: (id_a, id_b, est_ppm)
     with est_ppm = agreeing positions * 1e6 / num_hashes, exact integers.
     """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
     sigs = df.select(
         F.col(id_col).alias("doc"),
         minhash_signature_arrow(F.col(text_col), num_hashes, k).alias("sigs"),
     )
-    band_structs = []
-    for b in range(bands):
-        parts = [
-            F.element_at(F.col("sigs"), b * rows_per_band + i + 1).cast("string")
-            for i in range(rows_per_band)
-        ]
-        bh = md5_long(F.concat_ws("|", *parts), seed=1000 + b)
-        band_structs.append(F.struct(F.lit(b).alias("band"), bh.alias("band_hash")))
-    band_rows = sigs.select(
-        "doc", "sigs", F.explode(F.array(*band_structs)).alias("bx")
-    ).select(
-        "doc", "sigs", F.col("bx.band").alias("band"), F.col("bx.band_hash").alias("band_hash")
-    )
+    band_rows = _banded(sigs, num_hashes, bands, ("doc", "sigs"))
     # NOTE (r10, measured): no localCheckpoint here either — the self-join
     # sides share one (band, band_hash) exchange at runtime (see
     # minhash_lsh_pairs), so the signature UDF already runs once.
@@ -485,6 +475,60 @@ def hamming_distance(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def sorted_pairs(arr: str, a: str, b: str) -> Column:
+    """One row per pair of the array column ``arr``: ``struct<a, b>`` for
+    every element ``a`` and every later element ``b`` (all i < j
+    combinations, so a sorted array yields a < b), as a generator to alias.
+    Quadratic per array: callers bound the array size (posting caps,
+    basket sizes)."""
+    return F.explode(
+        F.flatten(
+            F.transform(
+                F.col(arr),
+                lambda x, i: F.transform(
+                    F.slice(F.col(arr), i + 2, F.greatest(F.size(arr) - i - 1, F.lit(1))),
+                    lambda y: F.struct(x.alias(a), y.alias(b)),
+                ),
+            )
+        )
+    )
+
+
+def _shingle_postings(
+    df: DataFrame, text_col: str, id_col: str, k: int, block_col: str | None
+) -> DataFrame:
+    """``(blk, sh, docs)``: the shingle inverted index, one posting list per
+    (block, shingle hash) holding >= 2 documents, each entry
+    ``struct(doc, n_sh)`` with ``n_sh`` the document's distinct-shingle
+    count, sorted by doc. Without ``block_col`` every document is in one
+    block."""
+    base = df.select(
+        F.col(id_col).alias("doc"),
+        *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
+        shingle_hashes_arrow(F.col(text_col), k).alias("shingles"),
+    ).withColumn("n_sh", F.size("shingles"))
+    ex = base.select("doc", "blk", "n_sh", F.explode("shingles").alias("sh"))
+    return ex.groupBy("blk", "sh").agg(
+        F.array_sort(F.collect_list(F.struct("doc", "n_sh"))).alias("docs")
+    ).filter(F.size("docs") >= 2)  # singleton postings generate no pairs
+
+
+def _posting_intersections(postings: DataFrame) -> DataFrame:
+    """``(id_a, id_b, na, nb, inter)`` with id_a < id_b: the number of
+    posting lists the two documents share, next to their shingle counts."""
+    pairs = postings.select(sorted_pairs("docs", "a", "b").alias("p"))
+    return (
+        pairs.select(
+            F.col("p.a.doc").alias("id_a"),
+            F.col("p.b.doc").alias("id_b"),
+            F.col("p.a.n_sh").alias("na"),
+            F.col("p.b.n_sh").alias("nb"),
+        )
+        .groupBy("id_a", "id_b", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -518,41 +562,10 @@ def ngram_jaccard_pairs(
     only miss pairs whose overlap is mostly boilerplate, which is the point.
     Default None = exact (no cap).
     """
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
-        shingle_hashes_arrow(F.col(text_col), k).alias("shingles"),
-    ).withColumn("n_sh", F.size("shingles"))
-    ex = base.select("doc", "blk", "n_sh", F.explode("shingles").alias("sh"))
-    postings = ex.groupBy("blk", "sh").agg(
-        F.array_sort(F.collect_list(F.struct("doc", "n_sh"))).alias("docs")
-    ).filter(F.size("docs") >= 2)  # singleton postings generate no pairs
+    postings = _shingle_postings(df, text_col, id_col, k, block_col)
     if max_posting is not None:
         postings = postings.filter(F.size("docs") <= max_posting)
-    # all (i < j) combinations of the posting list
-    pairs = postings.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("docs"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("docs"), i + 2, F.greatest(F.size("docs") - i - 1, F.lit(1))),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    inter = (
-        pairs.select(
-            F.col("p.a.doc").alias("id_a"),
-            F.col("p.b.doc").alias("id_b"),
-            F.col("p.a.n_sh").alias("na"),
-            F.col("p.b.n_sh").alias("nb"),
-        )
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter = _posting_intersections(postings)
     # jaccard_ppm is exact integer arithmetic (cross-engine reproducible);
     # the double `jaccard` is for human consumption.
     jac = inter.withColumn(
@@ -617,22 +630,7 @@ def jaccard_prefix_filter_pairs(
         .filter(F.size("docs") >= 2)
     )
     cand = (
-        postings.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("docs"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("docs"), i + 2,
-                                F.greatest(F.size("docs") - i - 1, F.lit(1)),
-                            ),
-                            lambda y: F.struct(x.alias("a"), y.alias("b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
+        postings.select(sorted_pairs("docs", "a", "b").alias("p"))
         .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
     )
@@ -679,38 +677,7 @@ def shingle_containment_pairs(
     containments plus the symmetric min-denominator score that the
     threshold applies to.
     """
-    base = df.select(
-        F.col(id_col).alias("doc"),
-        *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
-        shingle_hashes_arrow(F.col(text_col), k).alias("shingles"),
-    ).withColumn("n_sh", F.size("shingles"))
-    ex = base.select("doc", "blk", "n_sh", F.explode("shingles").alias("sh"))
-    postings = ex.groupBy("blk", "sh").agg(
-        F.array_sort(F.collect_list(F.struct("doc", "n_sh"))).alias("docs")
-    ).filter(F.size("docs") >= 2)
-    pairs = postings.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("docs"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("docs"), i + 2, F.greatest(F.size("docs") - i - 1, F.lit(1))),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    inter = (
-        pairs.select(
-            F.col("p.a.doc").alias("id_a"),
-            F.col("p.b.doc").alias("id_b"),
-            F.col("p.a.n_sh").alias("na"),
-            F.col("p.b.n_sh").alias("nb"),
-        )
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter = _posting_intersections(_shingle_postings(df, text_col, id_col, k, block_col))
     cont = inter.select(
         "id_a", "id_b",
         F.expr("(inter * 1000000) div na").alias("containment_a_ppm"),
@@ -804,28 +771,10 @@ def substring_span_stats(
     the XL scaling probe's adversarial fully-duplicated corpus is exactly
     the case this bounds. Default None = exact (the oracle-checked mode).
     """
-    from pyspark.sql import Window as W
-
     base = df.select(
         F.col(id_col).alias("doc"), window_hashes_arrow(F.col(text_col), w).alias("whs")
     )
-    wins = base.select("doc", F.posexplode("whs").alias("pos", "wh"))
-    dup = (
-        wins.groupBy("wh")
-        .agg(F.min("doc").alias("mn"), F.max("doc").alias("mx"),
-             F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("mn") != F.col("mx"))
-    )
-    if max_occurrences is not None:
-        dup = dup.filter(F.col("cnt") <= max_occurrences)
-    dup = dup.select("wh")
-    flagged = wins.join(dup, ["wh"]).select("doc", "pos")
-    isl = flagged.withColumn(
-        "grp", F.col("pos") - F.row_number().over(W.partitionBy("doc").orderBy("pos"))
-    )
-    spans = isl.groupBy("doc", "grp").agg(
-        F.min("pos").alias("s"), F.max("pos").alias("e"), F.count(F.lit(1)).alias("nwin")
-    )
+    spans = _duplicate_spans(base, max_occurrences)
     per_doc = spans.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum("nwin").alias("n_dup_windows"),
@@ -842,6 +791,31 @@ def substring_span_stats(
             F.col("max_span_tokens").cast("long").alias("max_span_tokens"),
             F.expr("n_dup_windows * 1000000 div n_windows").alias("dup_ppm"),
         )
+    )
+
+
+def _duplicate_spans(base: DataFrame, max_occurrences: int | None) -> DataFrame:
+    """``(doc, grp, s, e, nwin)``: the maximal runs of consecutive window
+    positions of ``base``'s ``whs`` array (one row per ``doc``) whose window
+    hash also occurs in another document, from window ``s`` to window ``e``
+    (``nwin`` windows). Hashes in more than ``max_occurrences`` windows are
+    not flagged (None: no cap). Consecutive positions share
+    ``grp = pos - row_number`` (the islands trick)."""
+    wins = base.select("doc", F.posexplode("whs").alias("pos", "wh"))
+    dup = (
+        wins.groupBy("wh")
+        .agg(F.min("doc").alias("mn"), F.max("doc").alias("mx"),
+             F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("mn") != F.col("mx"))
+    )
+    if max_occurrences is not None:
+        dup = dup.filter(F.col("cnt") <= max_occurrences)
+    flagged = wins.join(dup.select("wh"), ["wh"]).select("doc", "pos")
+    isl = flagged.withColumn(
+        "grp", F.col("pos") - F.row_number().over(Window.partitionBy("doc").orderBy("pos"))
+    )
+    return isl.groupBy("doc", "grp").agg(
+        F.min("pos").alias("s"), F.max("pos").alias("e"), F.count(F.lit(1)).alias("nwin")
     )
 
 
@@ -867,28 +841,14 @@ def substring_span_removal(
     the oracle to verify the exact reconstructed string without shipping
     text.
     """
-    from pyspark.sql import Window as W
-
     toks = tokens(normalize(F.col(text_col)))
     base = df.select(
         F.col(id_col).alias("doc"),
         toks.alias("tk"),
         window_hashes_arrow(F.col(text_col), w).alias("whs"),
     )
-    wins = base.select("doc", F.posexplode("whs").alias("pos", "wh"))
-    dup = (
-        wins.groupBy("wh")
-        .agg(F.min("doc").alias("mn"), F.max("doc").alias("mx"))
-        .filter(F.col("mn") != F.col("mx"))
-        .select("wh")
-    )
-    flagged = wins.join(dup, ["wh"]).select("doc", "pos")
-    isl = flagged.withColumn(
-        "grp", F.col("pos") - F.row_number().over(W.partitionBy("doc").orderBy("pos"))
-    )
     spans = (
-        isl.groupBy("doc", "grp")
-        .agg(F.min("pos").alias("s"), F.max("pos").alias("e"))
+        _duplicate_spans(base, None)
         .groupBy("doc")
         .agg(F.collect_list(F.struct("s", "e")).alias("spans"))
     )

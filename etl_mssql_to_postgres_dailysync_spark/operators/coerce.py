@@ -45,11 +45,6 @@ def to_decimal(c: Column | str) -> Column:
     return col.cast(T.DecimalType(18, 4))
 
 
-def to_int(c: Column | str) -> Column:
-    """C5 — string->int (csv_to_mssqldb.py:321-326)."""
-    return (F.col(c) if isinstance(c, str) else c).cast("int")
-
-
 def to_timestamp_ladder(c: Column | str) -> Column:
     """C3 — fixed-format parse with inference fallback, all-errors->NULL."""
     col = F.col(c) if isinstance(c, str) else c

@@ -26,7 +26,7 @@ execution.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -55,41 +55,16 @@ def global_cumsum(
     collected — repeated calls in a long-lived session do not accumulate
     pinned storage (the old ``persist()`` needed a manual unpersist that no
     caller could safely place)."""
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    )
-    base = ranged.withColumn("_pid", F.spark_partition_id())
     w_local = (
         Window.partitionBy("_pid")
         .orderBy(*[F.col(c) for c in order_cols])
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = base.withColumn(
-        "_local", F.sum(F.col(value_col)).over(w_local)
-    ).localCheckpoint(eager=True)
-    totals = (
-        local.groupBy("_pid").agg(F.sum(F.col(value_col)).alias("_tot")).collect()
+    local, prefix, _ = _two_phase(
+        df, order_cols, num_partitions,
+        F.sum(F.col(value_col)).over(w_local), F.sum(F.col(value_col)),
     )
-    running = 0
-    offsets: dict[int, int] = {}
-    for row in sorted(totals, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = running
-        running += row["_tot"] or 0
-    if not offsets:
-        return local.withColumn(out_col, F.col("_local")).drop("_pid", "_local")
-    offset_expr = F.element_at(
-        F.map_from_arrays(
-            F.array(*[F.lit(p) for p in offsets]),
-            F.array(*[F.lit(v) for v in offsets.values()]),
-        ),
-        F.col("_pid"),
-    )
-    return (
-        local.withColumn(out_col, F.col("_local") + offset_expr)
-        .drop("_pid", "_local")
-    )
+    return local.withColumn(out_col, prefix).drop("_pid", "_local")
 
 
 def global_row_number(
@@ -110,27 +85,42 @@ def global_row_number(
     Returns ``(df_with_rank, total_rows)`` — the total falls out of the
     offsets job for free and downstream order statistics (ntile, percentile
     cuts) need it."""
+    w_local = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
+    local, prefix, total = _two_phase(
+        df, order_cols, num_partitions, F.row_number().over(w_local), F.count(F.lit(1))
+    )
+    return local.withColumn(out_col, prefix.cast("long")).drop("_pid", "_local"), total
+
+
+def _two_phase(
+    df: DataFrame,
+    order_cols: list[str],
+    num_partitions: int | None,
+    local_value: Column,
+    part_total: Column,
+) -> tuple[DataFrame, Column, int]:
+    """The shared phases of the two-phase prefix: range-repartition ``df``
+    on ``order_cols``, tag each row with its partition id ``_pid``, add the
+    partition-local prefix ``_local = local_value`` (a window over ``_pid``)
+    and checkpoint; then collect ``part_total`` per partition. Returns the
+    checkpointed frame, the global prefix (``_local`` plus the sum of the
+    totals of all lower partitions, looked up by ``_pid``) and the sum of
+    all totals."""
     ranged = (
         df.repartitionByRange(num_partitions, *order_cols)
         if num_partitions
         else df.repartitionByRange(*order_cols)
     )
     base = ranged.withColumn("_pid", F.spark_partition_id())
-    w_local = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    local = base.withColumn("_local", F.row_number().over(w_local)).localCheckpoint(
-        eager=True
-    )
-    counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_tot")).collect()
+    local = base.withColumn("_local", local_value).localCheckpoint(eager=True)
+    totals = local.groupBy("_pid").agg(part_total.alias("_tot")).collect()
     running = 0
     offsets: dict[int, int] = {}
-    for row in sorted(counts, key=lambda r: r["_pid"]):
+    for row in sorted(totals, key=lambda r: r["_pid"]):
         offsets[row["_pid"]] = running
-        running += row["_tot"]
+        running += row["_tot"] or 0
     if not offsets:
-        return (
-            local.withColumn(out_col, F.col("_local").cast("long")).drop("_pid", "_local"),
-            0,
-        )
+        return local, F.col("_local"), running
     offset_expr = F.element_at(
         F.map_from_arrays(
             F.array(*[F.lit(p) for p in offsets]),
@@ -138,11 +128,7 @@ def global_row_number(
         ),
         F.col("_pid"),
     )
-    out = (
-        local.withColumn(out_col, (F.col("_local") + offset_expr).cast("long"))
-        .drop("_pid", "_local")
-    )
-    return out, running
+    return local, F.col("_local") + offset_expr, running
 
 
 def global_ntile(

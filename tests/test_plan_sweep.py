@@ -45,60 +45,70 @@ ALLOWED_NESTED_LOOP: dict[str, str] = {
 }
 
 # Queries with driver-side setup (file writes, availableNow streams,
-# training/iteration loops) EXECUTE that setup when the plan is built.
-# They were SKIPped through r4, which left exactly the most complex plans
-# ungated (r4 verdict ask #2); all their side effects are hermetic /tmp or
-# tempfile writes and cheap at sf0.001, so since r5 they run through the
-# same _PLAN_CACHE one-build-per-session path and face the SAME gates.
-# The captured plan is the FINAL DataFrame's executed plan — for iterative
-# algorithms (connected components, PageRank, k-means training) that is the
-# last-iteration plan above the localCheckpoint barrier, which is the shape
-# that actually repeats at scale.
+# training/iteration loops, localCheckpoint pins, two-phase global ranks)
+# EXECUTE that setup when the plan is built. The set is measured: the
+# queries whose build runs Spark jobs when tools/profile_queries.py profiles
+# the sf0.001 fixture (build_jobs > 0, second build of the process), plus
+# the two availableNow streams whose jobs that count cannot see (a stream
+# runs its batches on its own thread, under its own job group). All side
+# effects are hermetic /tmp or tempfile writes and cheap at sf0.001;
+# these queries face the same gates as the rest. The captured plan is the
+# FINAL DataFrame's executed plan — for iterative algorithms (connected
+# components, k-means training) that is the last-iteration plan above the
+# localCheckpoint barrier, which is the shape that actually repeats at
+# scale.
 EXECUTES_AT_BUILD = {
     "txn_table_snapshot", "txn_table_changes", "incremental_rollup_maintenance",
     "streaming_cdc_rollup",  # runs two availableNow streams at build time
     "streaming_sessionize",  # runs an availableNow session_window stream
     "streaming_dedup_replay",  # runs an availableNow dropDuplicates stream
-    "quantile_normalization_map",  # two-phase global rank collects offsets
-    "conformal_interval",  # calibration-quantile rank collects offsets
-    "conformal_interval_sketch",  # 1-row fit + bucket table checkpointed
     "governed_ingest",  # writes the loaded and quarantine TxnTables at plan-build time
     "gdpr_erasure_audit",  # TxnTable append+delete at plan-build time
+    "zorder_pruning_audit",  # TxnTable writes, then global_ntile
     "orc_roundtrip", "jsonl_roundtrip", "csv_roundtrip", "xml_roundtrip",
+    # two-phase global rank / ntile / cumsum (operators/cumsum): the
+    # range-partitioned local pass is checkpointed and its per-partition
+    # totals collected
+    "quantile_normalization_map", "conformal_interval", "exact_percentiles",
+    "equidepth_histogram", "curriculum_length_deciles", "ngram_novelty_curve",
+    "quality_dup_calibration", "quality_selection_frontier",
+    "winsorized_price_stats", "text_zipf_fit", "global_running_revenue",
+    # training / iteration loops that collect or checkpoint per round
     "similarity_ann_ivf_trained",  # training loop collects per iteration
     "bpe_train_merges",  # per-round 1-row argmax collect in the merge loop
     "similarity_pq_adc",  # codebook training collects the sample
     "logistic_regression_irls",  # per-iteration 1-row beta localCheckpoint
     "logistic_calibration_quality",  # same IRLS fit at plan-build time
     "attribution_markov_removal",  # 49-row transition-matrix collect at build
-    "dedup_cluster_components", "pagerank_neardup_graph",  # iterative loops
+    "dedup_cluster_components", "dedup_cluster_stats",  # connected-components loop
     "graph_k_core_peel",  # per-round localCheckpoint of the peeled edges
-    # r8 (shuffle gate): pair/edge tables pinned — 5 branches read oriented
-    "triangle_count_degree_ordered",
-    # r7: the diamond-lineage queries the r6 verdict flagged now materialize
-    # their bounded iteration state (localCheckpoint / 1-row collect) at
-    # plan-build time instead of re-executing the data-grain pass per branch
-    "ipf_raking_weights",  # 125-cell + margin tables localCheckpoint-ed
     "adaboost_stumps",  # per-round 1-row best-stump collect
-    "mutual_information_matrix",  # 75-cell joint table localCheckpoint-ed
-    "median_polish_revenue",  # 300-cell matrix localCheckpoint-ed
-    "funnel_strict_windowed",  # per-step first-timestamp tables pinned
-    "levene_brown_forsythe",  # 25-row median + group-sum tables pinned
-    "bm25_prf_expansion",  # postings index materialized once
-    # r7 growth tranche: model-sized count tables materialized at build
-    "js_divergence_sources",  # (source, tok) count table localCheckpoint-ed
-    "t_closeness_audit",  # class x sensitive count table localCheckpoint-ed
-    "ar2_yule_walker_forecast",  # day-grain series + lag table checkpointed
-    "textrank_keywords",  # edge/degree/per-iteration rank tables checkpointed
-    "item_item_cosine_knn",  # distinct (basket, item) table checkpointed
-    "friedman_test_blocks",  # calendar x 5 cell grid checkpointed
-    "mmd_rbf_two_sample",  # 128-row audit population checkpointed
-    "page_trend_test",  # calendar x 5 cell grid checkpointed
-    "dunn_posthoc_nations",  # value-grain + 25-row rank tables checkpointed
-    # r10: recursion materialized under a statement-scoped cteRecursionRowLimit
-    # override (localCheckpoint inside the try/finally that restores the 1M
-    # session default)
-    "components_recursive_sql",
+    "pca_power_iteration",  # power-iteration collects, createDataFrame result
+    "components_recursive_sql",  # recursion localCheckpoint-ed under a row-limit override
+    # 1-row or model-sized collects
+    "approx_percentile_bounds",  # row count collected for the rank positions
+    "rfm_segmentation", "weekday_seasonality", "similarity_quantized_topk",  # .first()
+    "text_encode_ids",  # vocabulary collected into a map literal
+    # bounded tables materialized once with localCheckpoint
+    "triangle_count_degree_ordered",  # pair/edge tables pinned
+    "ipf_raking_weights",  # 125-cell + margin tables
+    "mutual_information_matrix",  # 75-cell joint table
+    "median_polish_revenue",  # 300-cell matrix
+    "funnel_strict_windowed",  # per-step first-timestamp tables
+    "levene_brown_forsythe",  # 25-row median + group-sum tables
+    "bm25_prf_expansion", "bm25_retrieval_topk",  # postings index
+    "js_divergence_sources",  # (source, tok) count table
+    "t_closeness_audit",  # class x sensitive count table
+    "ar2_yule_walker_forecast",  # day-grain series + lag table
+    "textrank_keywords",  # edge/degree/per-iteration rank tables
+    "item_item_cosine_knn",  # distinct (basket, item) table
+    "friedman_test_blocks", "page_trend_test",  # calendar x 5 cell grid
+    "mmd_rbf_two_sample",  # 128-row audit population
+    "dunn_posthoc_nations",  # value-grain + 25-row rank tables
+    "cv_leakage_neardup",  # <=15-row fold matrix
+    "kmv_cross_source_jaccard", "logodds_fightin_words", "tfidf_cosine_pairs",
+    "cooccurrence_pmi_window", "skipgram_pairs_subsampled",
+    "conformal_interval_sketch",  # 1-row fit + bucket table
 }
 
 # physical nodes that bound the row count flowing into a global window:

@@ -25,6 +25,8 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+from etl_mssql_to_postgres_dailysync_spark.functions import dedup
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 R10_CHANGED = [
@@ -102,22 +104,7 @@ def test_basket_array_pairs_equal_self_join_pairs(spark, sf_dir):
     # new shape: per-basket collect_set + array pair expansion
     baskets = li.groupBy("o").agg(F.array_sort(F.collect_set("p")).alias("ps"))
     new = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ps"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ps"), i + 2,
-                                F.greatest(F.size("ps") - i - 1, F.lit(1)),
-                            ),
-                            lambda y: F.struct(x.alias("a"), y.alias("b")),
-                        ),
-                    )
-                )
-            ).alias("pr")
-        )
+        baskets.select(dedup.sorted_pairs("ps", "a", "b").alias("pr"))
         .select(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
         .groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
     )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_mssql_to_postgres_dailysync_spark.functions import sketches
+from etl_mssql_to_postgres_dailysync_spark.functions import dedup, sketches
 
 
 def test_cms_build_from_counts_equals_cms_build(spark):
@@ -112,22 +112,7 @@ def test_basket_array_null_parity_vs_self_join(spark):
         .agg(F.array_sort(F.collect_set("p")).alias("ps"))
     )
     new = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ps"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ps"), i + 2,
-                                F.greatest(F.size("ps") - i - 1, F.lit(1)),
-                            ),
-                            lambda y: F.struct(x.alias("a"), y.alias("b")),
-                        ),
-                    )
-                )
-            ).alias("pr")
-        )
+        baskets.select(dedup.sorted_pairs("ps", "a", "b").alias("pr"))
         .select(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
         .groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
     )

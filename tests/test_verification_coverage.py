@@ -29,7 +29,9 @@ second):
 from __future__ import annotations
 
 import ast
+import importlib.util
 import os
+import sys
 
 from etl_mssql_to_postgres_dailysync_spark.plans.driver_queries import QUERIES
 
@@ -148,3 +150,21 @@ def test_runtime_manifest_records_execution():
     # seen() returns a copy: callers cannot corrupt the manifest
     coverage_manifest.seen().discard("___not_a_query___")
     assert "___not_a_query___" in coverage_manifest.seen()
+
+
+def test_mutation_smoke_snippets_match_the_code():
+    """Every mutation of tools/mutation_smoke.py finds its ``old`` text
+    exactly ``count`` times in its target file. A mutation whose text has
+    drifted from the code is reported as SNIPPET-DRIFT and tests nothing."""
+    path = os.path.join(os.path.dirname(_TESTS), "tools", "mutation_smoke.py")
+    spec = importlib.util.spec_from_file_location("mutation_smoke", path)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules["mutation_smoke"] = mod  # dataclasses resolve the module by name
+    spec.loader.exec_module(mod)
+    drift = {}
+    for m in mod.MUTATIONS:
+        with open(os.path.join(mod._REPO, m.file)) as f:
+            found = f.read().count(m.old)
+        if found != m.count:
+            drift[m.name] = f"expected {m.count}, found {found} in {m.file}"
+    assert not drift, drift

@@ -112,8 +112,8 @@ MUTATIONS = [
     ),
     Mutation(
         "simhash_tie_vote", _DEDUP,
-        "lambda cnt, p: F.when(cnt > 0, p).otherwise(F.lit(0).cast(\"long\")),",
-        "lambda cnt, p: F.when(cnt >= 0, p).otherwise(F.lit(0).cast(\"long\")),",
+        'lambda cnt, j: F.when(cnt > 0, pow2(j)).otherwise(F.lit(0).cast("long")),',
+        'lambda cnt, j: F.when(cnt >= 0, pow2(j)).otherwise(F.lit(0).cast("long")),',
         _pytest("tests/test_replay_pipelines.py::"
                 "test_dedup_simhash_python_replay[seed42]"),
         "spark-only", "flip zero-vote bits to 1 in the SimHash sign pack",
@@ -136,7 +136,6 @@ MUTATIONS = [
         _pytest("tests/test_replay_pipelines.py::"
                 "test_exact_percentiles_python_replay[seed42]"),
         "spark-only", "off-by-one every two-phase global rank offset",
-        count=2,
     ),
     Mutation(
         "theil_sen_offset_drop", _DQ,
