@@ -46,17 +46,18 @@ ALLOWED_NESTED_LOOP: dict[str, str] = {
 
 # Queries with driver-side setup (file writes, availableNow streams,
 # training/iteration loops, localCheckpoint pins, two-phase global ranks)
-# EXECUTE that setup when the plan is built. The set is measured: the
-# queries whose build runs Spark jobs when tools/profile_queries.py profiles
-# the sf0.001 fixture (build_jobs > 0, second build of the process), plus
-# the two availableNow streams whose jobs that count cannot see (a stream
-# runs its batches on its own thread, under its own job group). All side
-# effects are hermetic /tmp or tempfile writes and cheap at sf0.001;
-# these queries face the same gates as the rest. The captured plan is the
-# FINAL DataFrame's executed plan — for iterative algorithms (connected
-# components, k-means training) that is the last-iteration plan above the
-# localCheckpoint barrier, which is the shape that actually repeats at
-# scale.
+# EXECUTE that setup when the plan is built. The set is measured: exactly
+# the queries whose build runs Spark jobs when tools/profile_queries.py
+# profiles the sf0.001 fixture (build_jobs > 0, second build of the
+# process). That count covers every thread, so the availableNow streams,
+# whose batches run on the stream's own thread under its own job group,
+# are measured too (streaming_sessionize 1 job, streaming_dedup_replay 2,
+# streaming_cdc_rollup 13). All side effects are hermetic /tmp or tempfile
+# writes and cheap at sf0.001; these queries face the same gates as the
+# rest. The captured plan is the FINAL DataFrame's executed plan — for
+# iterative algorithms (connected components, k-means training) that is the
+# last-iteration plan above the localCheckpoint barrier, which is the shape
+# that actually repeats at scale.
 EXECUTES_AT_BUILD = {
     "txn_table_snapshot", "txn_table_changes", "incremental_rollup_maintenance",
     "streaming_cdc_rollup",  # runs two availableNow streams at build time

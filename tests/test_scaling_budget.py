@@ -2,9 +2,10 @@
 measured 10x tables, encoded as an executable budget.
 
 Opt-in (SPARK_GRAFT_SCALING=1): builds the derived sf~1 fixture (sf0.1
-unioned 10x with offset keys — tools/scale_probe_xl.build, the same data
-every SCALING.md xl row used), measures each budgeted query warm at sf0.1
-and sf~1, and asserts the wall-clock growth over the 10x step stays under
+unioned 10x with offset keys — tools/scale_probe_xl.build, the top rung of
+the scaling probe's sf0.001 -> sf~1 ladder and the same data every
+SCALING.md sf~1 row used), measures each budgeted query warm at sf0.1 and
+sf~1, and asserts the wall-clock growth over the 10x step stays under
 its documented bound. A regression to super-linear behavior (a lost
 localCheckpoint, a broadcast that silently became a shuffle join, a new
 accidental quadratic) goes red HERE instead of surfacing as prose drift in

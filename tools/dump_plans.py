@@ -132,7 +132,10 @@ def _explain(df, mode: str) -> str:
 
 
 def _spark():
-    spark = get_spark(app_name="dump-plans")
+    # a fixed local[4] with 4 shuffle partitions, so partition counts in the
+    # plans do not depend on the host's cores
+    spark = get_spark(app_name="dump-plans", master="local[4]",
+                      shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -166,7 +169,8 @@ def main() -> int:
     out = [
         "# PLANS — physical plans: curated showcase + full-registry index",
         "",
-        f"Generated by `python tools/dump_plans.py {sf_dir}`. Each showcase plan",
+        f"Generated by `python tools/dump_plans.py {sf_dir}`, planned at a fixed",
+        "`local[4]` with 4 shuffle partitions. Each showcase plan",
         "is the Catalyst/AQE physical plan the engine actually executes; the",
         "one-line note states the scale property the plan must (and does)",
         "exhibit, enforced by tests/test_plans.py. The index below fingerprints",

@@ -62,9 +62,9 @@ def _oracle(*queries: str) -> list[str]:
 
 def _degenerate(kind: str, *queries: str) -> list[str]:
     """Oracle parity at a degenerate fixture — the standing degenerate
-    gate's detector arm (tests/test_degenerate_gate.py sweeps the full
+    gate's sweep (tests/test_degenerate_gate.py runs it on the full
     registry per kind; mutations only need the queries the bug can move)."""
-    return [sys.executable, "tools/degenerate_check.py", kind, *queries]
+    return [sys.executable, "tools/parity_sweep.py", kind, *queries]
 
 
 MUTATIONS = [
@@ -323,9 +323,10 @@ def main() -> int:
         "and the DuckDB oracle IDENTICALLY — oracle parity stays green on",
         "them by construction, so only a third implementation can object.",
         "r10 rows seed the r9 degenerate-campaign fix classes; their",
-        "detector is the standing degenerate gate's per-fixture parity arm",
-        "(tools/degenerate_check.py = tests/test_degenerate_gate.py on the",
-        "affected queries). Every detector is first required to PASS on the",
+        "detector is the standing degenerate gate's parity sweep on the",
+        "affected queries (tools/parity_sweep.py <kind> <query>, the sweep",
+        "tests/test_degenerate_gate.py runs per kind). Every detector is",
+        "first required to PASS on the",
         "unmutated tree (BASELINE-RED otherwise), and only exit code 1 —",
         "tests ran and failed — counts as CAUGHT (a typo'd node id or a",
         "crashed detector reports DETECTOR-ERROR, not a catch).",

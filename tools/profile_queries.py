@@ -1,109 +1,137 @@
-"""Per-query profiling harness (optimization rounds, guide §1).
+"""Per-query profiler: for each registry query, the build phase (the Python
+calls that return the DataFrame, including any Spark jobs the build itself
+runs — the EXECUTES_AT_BUILD collects, localCheckpoints, file writes and
+availableNow streams) and the action phase (the bench action, ``.count()``).
 
-For each registry query: build the DataFrame (counting the Spark jobs the
-BUILD itself runs — the EXECUTES_AT_BUILD collects/localCheckpoints), then
-run the bench action (``.count()``) under a job group and report wall time
-plus job / stage / task counts for each phase. High job counts at near-zero
-data volume are the local-mode signature of sequential mini-job overhead;
-high stage counts per job are shuffle chains.
+Each query is built and counted once to warm up (JIT, page cache, Python
+workers), then built again and counted ``SPARK_GRAFT_BENCH_RUNS`` times
+(default 3); ``act_s`` is the median of those counts. Per phase the profiler
+reports the jobs, stages (skipped stages excluded), tasks, shuffle read and
+write bytes and spill bytes of every job the phase ran on ANY thread: it
+diffs the job and stage ids of Spark's status REST API before and after the
+phase, so a stream's batches, which run on the stream's own thread under its
+own job group, are counted too. It diffs ids, not running totals, because
+the status store keeps only the last 1,000 jobs and stages. High job counts
+at near-zero data volume are the local-mode signature of sequential
+mini-job overhead; high stage counts per job are shuffle chains.
 
 Usage: python tools/profile_queries.py [sf_dir] [query ...]
        (default sf_dir /root/testdata/sf0.1; no names = full registry)
-Output: one JSON line per query + a sorted summary table on stderr.
+Output: one JSON line per query on stdout, then a markdown table sorted by
+total seconds on stderr (SHUFFLE.md is that table over bench.HEADLINE).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from etl_mssql_to_postgres_dailysync_spark.session import get_spark
 
+MB = 1024 * 1024
 
-def job_stats(sc, group: str) -> tuple[int, int, int]:
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
-    n_stages = 0
-    n_tasks = 0
-    for jid in job_ids:
-        ji = tracker.getJobInfo(jid)
-        if ji is None:
-            continue
-        for sid in ji.stageIds:
-            si = tracker.getStageInfo(sid)
-            if si is not None:
-                n_stages += 1
-                n_tasks += si.numTasks
-    return len(job_ids), n_stages, n_tasks
+
+def status(sc) -> tuple[set[int], dict[tuple[int, int], dict]]:
+    """Job ids and stage attempts in the application's status REST API, read
+    after the listener bus has delivered every event posted so far (so a
+    finished job is in the store)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    with urllib.request.urlopen(f"{base}/jobs") as r:
+        jobs = {j["jobId"] for j in json.load(r)}
+    with urllib.request.urlopen(f"{base}/stages") as r:
+        stages = {(s["stageId"], s["attemptId"]): s for s in json.load(r)}
+    return jobs, stages
+
+
+def phase(sc, fn) -> tuple[object, float, dict]:
+    """Run ``fn`` and return (its result, wall seconds, the counters of the
+    jobs and stages that are new in the status store since it started)."""
+    jobs0, stages0 = status(sc)
+    t0 = time.time()
+    out = fn()
+    wall = time.time() - t0
+    jobs1, stages1 = status(sc)
+    ran = [s for k, s in stages1.items()
+           if k not in stages0 and s["status"] != "SKIPPED"]
+    return out, wall, {
+        "jobs": len(jobs1 - jobs0),
+        "stages": len(ran),
+        "tasks": sum(s["numTasks"] for s in ran),
+        "shuffle_read_bytes": sum(s["shuffleReadBytes"] for s in ran),
+        "shuffle_write_bytes": sum(s["shuffleWriteBytes"] for s in ran),
+        "spill_bytes": sum(s["diskBytesSpilled"] + s["memoryBytesSpilled"]
+                           for s in ran),
+    }
+
+
+def profile(spark, fn, sf_dir: str, runs: int) -> dict:
+    fn(spark, sf_dir).count()  # warm-up
+    sc = spark.sparkContext
+    df, build_s, build = phase(sc, lambda: fn(spark, sf_dir))
+    act_walls = []
+    for _ in range(runs):
+        _, wall, act = phase(sc, df.count)
+        act_walls.append(wall)
+    act_s = statistics.median(act_walls)
+    rec = {"total_s": round(build_s + act_s, 3), "build_s": round(build_s, 3),
+           "act_s": round(act_s, 3)}
+    rec.update({f"build_{k}": v for k, v in build.items()})
+    rec.update({f"act_{k}": v for k, v in act.items()})
+    return rec
+
+
+def markdown(rows: list[dict]) -> list[str]:
+    """Build+action totals per query, heaviest first."""
+    lines = [
+        "| query | s | build s | act s | jobs (build+act) | stages | tasks "
+        "| shuffle write MB | shuffle read MB | spill MB |",
+        "|---|---|---|---|---|---|---|---|---|---|",
+    ]
+    for r in sorted(rows, key=lambda r: -r["total_s"]):
+        tot = {k: r[f"build_{k}"] + r[f"act_{k}"] for k in (
+            "stages", "tasks", "shuffle_write_bytes", "shuffle_read_bytes",
+            "spill_bytes")}
+        lines.append(
+            f"| {r['query']} | {r['total_s']:.2f} | {r['build_s']:.2f} "
+            f"| {r['act_s']:.2f} | {r['build_jobs']}+{r['act_jobs']} "
+            f"| {tot['stages']} | {tot['tasks']} "
+            f"| {tot['shuffle_write_bytes'] / MB:.2f} "
+            f"| {tot['shuffle_read_bytes'] / MB:.2f} "
+            f"| {tot['spill_bytes'] / MB:.1f} |"
+        )
+    return lines
 
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     names = args[1:]
-    spark = get_spark(app_name="profile")
+    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    spark = get_spark(app_name="profile", extra_conf={
+        "spark.ui.enabled": "true", "spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
     qs = entry_mod.queries()
-    if not names:
-        names = list(qs)
     rows = []
-    for name in names:
+    for name in names or list(qs):
         if name not in qs:
             print(f"unknown query: {name}", file=sys.stderr)
             continue
-        # warm-up once (JIT, page cache) so phases measure steady state
         try:
-            qs[name](spark, sf_dir).count()
+            rec = {"query": name, **profile(spark, qs[name], sf_dir, runs)}
         except Exception as e:  # noqa: BLE001
             print(json.dumps({"query": name, "error": repr(e)[:300]}))
             continue
-        gb = f"profile-build-{name}"
-        sc.setJobGroup(gb, f"build {name}")
-        t0 = time.time()
-        df = qs[name](spark, sf_dir)
-        t_build = time.time() - t0
-        b_jobs, b_stages, b_tasks = job_stats(sc, gb)
-        ga = f"profile-act-{name}"
-        sc.setJobGroup(ga, f"count {name}")
-        t0 = time.time()
-        df.count()
-        t_act = time.time() - t0
-        a_jobs, a_stages, a_tasks = job_stats(sc, ga)
-        sc.setJobGroup(None, None)
-        rec = {
-            "query": name,
-            "total_s": round(t_build + t_act, 3),
-            "build_s": round(t_build, 3),
-            "act_s": round(t_act, 3),
-            "build_jobs": b_jobs,
-            "build_stages": b_stages,
-            "build_tasks": b_tasks,
-            "act_jobs": a_jobs,
-            "act_stages": a_stages,
-            "act_tasks": a_tasks,
-        }
         rows.append(rec)
         print(json.dumps(rec), flush=True)
-    rows.sort(key=lambda r: -r["total_s"])
-    print(
-        f"{'query':42s} {'total':>7s} {'build':>7s} {'act':>7s} "
-        f"{'bJ':>3s} {'bS':>4s} {'bT':>5s} {'aJ':>3s} {'aS':>4s} {'aT':>5s}",
-        file=sys.stderr,
-    )
-    for r in rows:
-        print(
-            f"{r['query']:42s} {r['total_s']:7.3f} {r['build_s']:7.3f} "
-            f"{r['act_s']:7.3f} {r['build_jobs']:3d} {r['build_stages']:4d} "
-            f"{r['build_tasks']:5d} {r['act_jobs']:3d} {r['act_stages']:4d} "
-            f"{r['act_tasks']:5d}",
-            file=sys.stderr,
-        )
+    print("\n".join(markdown(rows)), file=sys.stderr)
 
 
 if __name__ == "__main__":
